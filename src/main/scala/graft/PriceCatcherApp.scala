@@ -100,8 +100,6 @@ object PriceCatcherApp {
     val path = SqlitePacker.pack(outDir, latest, premises, items)
     println(s"Packed: $path (${Files.size(path)} bytes)")
     println("Wrote pricecatcher.db (native SQLite file) + CSV/schema.sql parity artifact")
-    if (SqlitePacker.sqliteJdbcAvailable)
-      println("sqlite-jdbc also detected: JDBC write path available")
     spark.stop()
   }
 }

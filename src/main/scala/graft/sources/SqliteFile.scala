@@ -234,24 +234,26 @@ object SqliteFile {
   }
 
   /** Greedy cell packing: max cells per page under the usable budget. */
-  private def packPages(cells: Seq[Array[Byte]], headerLen: Int,
-                        usable: Int): Seq[Seq[Array[Byte]]] = {
-    val groups = ArrayBuffer[Seq[Array[Byte]]]()
+  private def packPages(cells: IndexedSeq[Array[Byte]], headerLen: Int,
+                        usable: Int): IndexedSeq[IndexedSeq[Array[Byte]]] = {
+    val groups = ArrayBuffer[IndexedSeq[Array[Byte]]]()
     var cur = ArrayBuffer[Array[Byte]]()
     var used = headerLen
     cells.foreach { c =>
       if (cur.nonEmpty && used + 2 + c.length > usable) {
-        groups += cur.toSeq; cur = ArrayBuffer[Array[Byte]](); used = headerLen
+        groups += cur.toIndexedSeq; cur = ArrayBuffer[Array[Byte]](); used = headerLen
       }
       cur += c; used += 2 + c.length
     }
-    if (cur.nonEmpty) groups += cur.toSeq
-    groups.toSeq
+    if (cur.nonEmpty) groups += cur.toIndexedSeq
+    groups.toIndexedSeq
   }
 
   /** Build a table b-tree from (rowid, record) pairs; returns root page.
-    * If `rootAtPage1`, the root lands on page 1 (sqlite_master). */
-  private def buildTableBtree(db: Db, rows: Seq[(Long, Array[Byte])],
+    * If `rootAtPage1`, the root lands on page 1 (sqlite_master). Every
+    * step indexes into `rows` and the levels built from it, hence
+    * IndexedSeq: on a List each lookup walks the list. */
+  private def buildTableBtree(db: Db, rows: IndexedSeq[(Long, Array[Byte])],
                               rootAtPage1: Boolean = false): Int = {
     val leafCells = rows.map { case (rowid, rec) =>
       // payloads past the X budget spill to an overflow chain; the
@@ -278,7 +280,7 @@ object SqliteFile {
     // leaves
     val leafGroups = packPages(leafCells, 8, PageSize)
     var idx = 0
-    var level: Seq[(Int, Long)] = leafGroups.map { g =>
+    var level: IndexedSeq[(Int, Long)] = leafGroups.map { g =>
       val no = db.alloc()
       db.put(no, buildPage(0x0D, g, 0, 0))
       idx += g.length
@@ -306,7 +308,7 @@ object SqliteFile {
         db.put(no, buildPage(0x05, cells, group.last._1, 0))
         next += ((no, group.last._2))
       }
-      level = next.toSeq
+      level = next.toIndexedSeq
     }
 
     val (rootNo, _) = level.head
@@ -409,8 +411,9 @@ object SqliteFile {
   /** Bulk-load an index b-tree from PRE-SORTED entry records (key cols +
     * rowid). Unlike table trees, interior pages hold real entries: when
     * a leaf fills, the next entry is PROMOTED as the divider that lives
-    * in the parent (each entry stored exactly once). Returns root. */
-  private def buildIndexBtree(db: Db, entries: Seq[Array[Byte]]): Int = {
+    * in the parent (each entry stored exactly once). Returns root.
+    * `entries` is read by position, hence IndexedSeq. */
+  private def buildIndexBtree(db: Db, entries: IndexedSeq[Array[Byte]]): Int = {
     if (entries.isEmpty) {
       val no = db.alloc(); db.put(no, buildPage(0x0A, Nil, 0, 0)); return no
     }
@@ -518,13 +521,20 @@ object SqliteFile {
     h
   }
 
-  /** Write a database file containing `tables` (rowids assigned 1..n in
-    * iteration order) and their index b-trees. Returns pages written. */
+  /** Write a database file containing `tables` and their index b-trees.
+    * Returns pages written.
+    *
+    * Rowids are assigned 1..n in each table's iteration order, so the
+    * file's bytes follow that order: a caller must not reorder rows if
+    * its artifact is to stay byte-identical.
+    *
+    * Memory: one table is held at a time, its rows and their encoded
+    * records, plus the sorted entries of the one index being built. */
   def write(path: Path, tables: Seq[TableDef]): Int = {
     val db = new Db
     val masterRows = ArrayBuffer[Seq[Any]]()
     tables.foreach { t =>
-      val rows = t.rows.toSeq // materialized: table cells + index keys
+      val rows = t.rows.toVector
       val encoded = rows.zipWithIndex
         .map { case (vals, i) => (i + 1L, encodeRecord(vals)) }
       val root = buildTableBtree(db, encoded)
@@ -540,9 +550,9 @@ object SqliteFile {
         masterRows += Seq("index", ix.name, t.name, iroot.toLong, ix.createSql)
       }
     }
-    val masterCells = masterRows.zipWithIndex
+    val masterCells = masterRows.toVector.zipWithIndex
       .map { case (vals, i) => (i + 1L, encodeRecord(vals)) }
-    buildTableBtree(db, masterCells.toSeq, rootAtPage1 = true)
+    buildTableBtree(db, masterCells, rootAtPage1 = true)
 
     val header = fileHeader(db.pages.length)
     System.arraycopy(header, 0, db.pages(0), 0, 100)

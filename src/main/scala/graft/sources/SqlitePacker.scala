@@ -17,17 +17,18 @@ import org.apache.spark.sql.functions._
   * this environment, so the sink produces the artifact two ways:
   *
   *  - `pricecatcher.db` — a REAL queryable SQLite database file written
-  *    directly from the public file format by [[SqliteFile]] (table
-  *    b-trees; the ten reference indexes are recreated by load.sql —
-  *    see SqliteFile's scope note). Rows stream through
-  *    `toLocalIterator` — single-writer by design, like the reference:
-  *    this is the *served* artifact, small relative to the lake; the
-  *    100 TB data stays in parquet.
-  *  - CSV + `schema.sql` (exact reference DDL incl. all ten indexes) +
+  *    directly from the public file format by [[SqliteFile]]: three
+  *    table b-trees and the reference's nine indexes as native index
+  *    b-trees. Rows arrive through `toLocalIterator`, but the writer
+  *    holds one whole table plus one index's sorted entries on the
+  *    driver at a time, so driver memory grows with the largest table
+  *    — single-writer by design, like the reference: this is the
+  *    *served* artifact, small relative to the lake; the 100 TB data
+  *    stays in parquet. Rowids follow the iterator's order, so the
+  *    frames handed in must keep a stable row order.
+  *  - CSV + `schema.sql` (exact reference DDL incl. all nine indexes) +
   *    `load.sql` — the text-tooling path: any sqlite3 rebuilds the
   *    fully indexed database from it.
-  *  - JDBC path (used iff org.sqlite.JDBC is ever on the classpath):
-  *    auto-detected, see [[sqliteJdbcAvailable]].
   *
   * Everything is zipped with deflate like the reference (main.rs:320).
   */
@@ -48,10 +49,6 @@ object SqlitePacker {
       |CREATE INDEX IF NOT EXISTS idx_items_item_group ON items (item_group);
       |CREATE INDEX IF NOT EXISTS idx_items_item_category ON items (item_category);
       |""".stripMargin
-
-  def sqliteJdbcAvailable: Boolean =
-    try { Class.forName("org.sqlite.JDBC"); true }
-    catch { case _: ClassNotFoundException => false }
 
   /** The reference's nine indexes (schemaSql above), as native index
     * b-trees in the .db artifact. keyCols are positions in the table's
