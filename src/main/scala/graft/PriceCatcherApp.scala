@@ -99,7 +99,7 @@ object PriceCatcherApp {
     println("Export artifact...")
     val path = SqlitePacker.pack(outDir, latest, premises, items)
     println(s"Packed: $path (${Files.size(path)} bytes)")
-    println("Wrote pricecatcher.db (native SQLite file) + CSV/schema.sql parity artifact")
+    println("Wrote pricecatcher.db (native SQLite file)")
     spark.stop()
   }
 }

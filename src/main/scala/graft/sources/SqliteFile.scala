@@ -6,10 +6,9 @@ import scala.collection.mutable.ArrayBuffer
 /** Minimal SQLite database-file writer + reader in pure JVM, from the
   * PUBLIC file-format spec (sqlite.org/fileformat2.html). No sqlite
   * library exists in this environment; the format itself is small
-  * enough to emit directly, which is what finally produces the
-  * reference's primary deliverable — a real, queryable `.db` file
-  * (reference src/main.rs:289-311 backup path) — instead of only the
-  * CSV + load.sql parity artifact.
+  * enough to emit directly, which is what produces the reference's
+  * deliverable — a real, queryable `.db` file (reference
+  * src/main.rs:289-311 backup path).
   *
   * Scope (documented, deliberate):
   *  - table b-trees (leaf + interior, multi-level) AND index b-trees

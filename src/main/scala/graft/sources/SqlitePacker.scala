@@ -14,43 +14,25 @@ import org.apache.spark.sql.functions._
   * The reference's deliverable is one indexed, compressed SQLite file
   * (reference: src/main.rs:191-208 DDL, main.rs:289-311 backup,
   * main.rs:312-325 zip). No sqlite library (JDBC or native) ships in
-  * this environment, so the sink produces the artifact two ways:
+  * this environment, so `pricecatcher.db` is written directly from the
+  * public file format by [[SqliteFile]]: three table b-trees and the
+  * reference's nine indexes as native index b-trees, with the
+  * reference's DDL (minus `IF NOT EXISTS`, as SQLite itself stores it)
+  * in `sqlite_master`. Rows arrive through `toLocalIterator`, but the
+  * writer holds one whole table plus one index's sorted entries on the
+  * driver at a time, so driver memory grows with the largest table —
+  * single-writer by design, like the reference: this is the *served*
+  * artifact, small relative to the lake; the 100 TB data stays in
+  * parquet. Rowids follow the iterator's order, so the frames handed in
+  * must keep a stable row order. The writer leaves no free pages, so
+  * the file is already what the reference's VACUUM would produce.
   *
-  *  - `pricecatcher.db` — a REAL queryable SQLite database file written
-  *    directly from the public file format by [[SqliteFile]]: three
-  *    table b-trees and the reference's nine indexes as native index
-  *    b-trees. Rows arrive through `toLocalIterator`, but the writer
-  *    holds one whole table plus one index's sorted entries on the
-  *    driver at a time, so driver memory grows with the largest table
-  *    — single-writer by design, like the reference: this is the
-  *    *served* artifact, small relative to the lake; the 100 TB data
-  *    stays in parquet. Rowids follow the iterator's order, so the
-  *    frames handed in must keep a stable row order.
-  *  - CSV + `schema.sql` (exact reference DDL incl. all nine indexes) +
-  *    `load.sql` — the text-tooling path: any sqlite3 rebuilds the
-  *    fully indexed database from it.
-  *
-  * Everything is zipped with deflate like the reference (main.rs:320).
+  * The file is zipped alone with deflate like the reference
+  * (main.rs:312-325).
   */
 object SqlitePacker {
 
-  /** Exact DDL parity with reference src/main.rs:192-207. */
-  val schemaSql: String =
-    """CREATE TABLE IF NOT EXISTS prices (date VARCHAR(255), premise_code INTEGER, item_code INTEGER, price FLOAT);
-      |CREATE INDEX IF NOT EXISTS idx_prices_premise_code ON prices (premise_code);
-      |CREATE INDEX IF NOT EXISTS idx_prices_item_code ON prices (item_code);
-      |CREATE TABLE IF NOT EXISTS premises (premise_code INTEGER, premise VARCHAR(255), address VARCHAR(255), premise_type VARCHAR(255), state VARCHAR(255), district VARCHAR(255));
-      |CREATE UNIQUE INDEX IF NOT EXISTS idx_premises_premise_code ON premises (premise_code);
-      |CREATE INDEX IF NOT EXISTS idx_premises_premise_type ON premises (premise_type);
-      |CREATE INDEX IF NOT EXISTS idx_premises_state ON premises (state);
-      |CREATE INDEX IF NOT EXISTS idx_premises_district ON premises (district);
-      |CREATE TABLE IF NOT EXISTS items (item_code INTEGER, item VARCHAR(255), unit VARCHAR(255), item_group VARCHAR(255), item_category VARCHAR(255));
-      |CREATE UNIQUE INDEX IF NOT EXISTS idx_items_item_code ON items (item_code);
-      |CREATE INDEX IF NOT EXISTS idx_items_item_group ON items (item_group);
-      |CREATE INDEX IF NOT EXISTS idx_items_item_category ON items (item_category);
-      |""".stripMargin
-
-  /** The reference's nine indexes (schemaSql above), as native index
+  /** The reference's nine indexes (main.rs:192-207), as native index
     * b-trees in the .db artifact. keyCols are positions in the table's
     * column order. */
   private val indexDefs: Map[String, Seq[SqliteFile.IndexDef]] = Map(
@@ -110,7 +92,8 @@ object SqlitePacker {
       }
     }
 
-  /** Write the three-table artifact directory + zip; returns zip path. */
+  /** Write `pricecatcher.db` and its zip into `outDir`; returns the zip
+    * path. */
   def pack(outDir: String, prices: DataFrame, premises: DataFrame,
            items: DataFrame): Path = {
     val dir = Paths.get(outDir)
@@ -118,19 +101,6 @@ object SqlitePacker {
     val tables = Seq("prices" -> prices, "premises" -> premises,
       "items" -> items)
 
-    tables.foreach { case (name, df) =>
-      stringified(df).coalesce(1).write.mode("overwrite")
-        .option("header", "true").csv(s"$outDir/$name.csv.d")
-      // promote the single part file to a stable name
-      val part = Files.list(Paths.get(s"$outDir/$name.csv.d")).iterator().asScala
-        .find(_.getFileName.toString.startsWith("part-")).get
-      Files.move(part, dir.resolve(s"$name.csv"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      deleteRecursive(Paths.get(s"$outDir/$name.csv.d"))
-    }
-
-    // the real database file — queryable by any sqlite3 as-is, with the
-    // reference's indexes as native b-trees
     val dbPath = dir.resolve("pricecatcher.db")
     SqliteFile.write(dbPath, tables.map { case (name, df) =>
       SqliteFile.TableDef(name, createTableSql(name),
@@ -138,34 +108,16 @@ object SqlitePacker {
         indexDefs.getOrElse(name, Nil))
     })
 
-    Files.writeString(dir.resolve("schema.sql"), schemaSql)
-    // load.sql bootstraps the DDL itself (reference flow: create tables +
-    // indexes, then insert, main.rs:192-207 -> 289-311). Without it,
-    // `.import` on a missing table silently consumes the CSV header as
-    // column names and types everything TEXT.
-    Files.writeString(dir.resolve("load.sql"),
-      ".read schema.sql\n.mode csv\n" + tables.map { case (n, _) =>
-        s".import --skip 1 $n.csv $n" }.mkString("\n") + "\nVACUUM;\n")
-
     // zip with deflate, matching the reference's packaging (main.rs:312-325)
     val zipPath = dir.resolve("pricecatcher.zip")
     val zos = new ZipOutputStream(new BufferedOutputStream(
       new FileOutputStream(zipPath.toFile)))
     try {
       zos.setLevel(9)
-      (tables.map(_._1 + ".csv") ++
-        Seq("pricecatcher.db", "schema.sql", "load.sql")).foreach { f =>
-        zos.putNextEntry(new ZipEntry(f))
-        Files.copy(dir.resolve(f), zos)
-        zos.closeEntry()
-      }
+      zos.putNextEntry(new ZipEntry("pricecatcher.db"))
+      Files.copy(dbPath, zos)
+      zos.closeEntry()
     } finally zos.close()
     zipPath
-  }
-
-  private def deleteRecursive(p: Path): Unit = {
-    if (Files.isDirectory(p))
-      Files.list(p).iterator().asScala.toSeq.foreach(deleteRecursive)
-    Files.deleteIfExists(p)
   }
 }

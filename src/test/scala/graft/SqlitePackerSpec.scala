@@ -3,19 +3,20 @@ package graft
 import java.nio.ByteBuffer
 import java.nio.file.{Files, Path, Paths}
 import java.security.MessageDigest
+import java.util.zip.ZipFile
 
+import scala.jdk.CollectionConverters._
 import scala.sys.process._
 
 import graft.sources.{SqliteFile, SqlitePacker}
 
-/** Artifact-sink contract: CSVs carry headers, load.sql bootstraps the
-  * DDL itself (a bare `.import` into a missing table silently consumes
-  * the header as column names and types everything TEXT), the zip holds
-  * all six files, the native pricecatcher.db round-trips through the
-  * independent [[SqliteFile]] reader, and — when a sqlite3 binary is
-  * present — both artifacts are verified by real sqlite3. The writer's
-  * output is pinned byte for byte by a golden SHA-256, and its cost by
-  * a wall-clock bound at a size where a super-linear writer blows it. */
+/** Artifact-sink contract: the zip holds one entry, `pricecatcher.db`,
+  * which carries the reference's DDL in its own `sqlite_master` and no
+  * free pages (already vacuumed); the db round-trips through the
+  * independent [[SqliteFile]] reader and, when a sqlite3 binary is
+  * present, through real sqlite3. The writer's output is pinned byte
+  * for byte by a golden SHA-256, and its cost by a wall-clock bound at
+  * a size where a super-linear writer blows it. */
 class SqlitePackerSpec extends SparkSpec {
   import spark.implicits._
 
@@ -144,7 +145,7 @@ class SqlitePackerSpec extends SparkSpec {
     Files.delete(path)
   }
 
-  test("pack emits a self-bootstrapping artifact that loads in sqlite3") {
+  test("pack zips pricecatcher.db alone, with the reference DDL and no free pages") {
     val out = Files.createTempDirectory("packer_spec").toString
     val prices = Seq(("2001-01-01", 1L, 10L, 9.99), ("2001-01-02", 2L, 11L, 5.0))
       .toDF("date", "premise_code", "item_code", "price")
@@ -153,30 +154,57 @@ class SqlitePackerSpec extends SparkSpec {
     val items = Seq((10L, "I1", "u", "g", "c"), (11L, "I2", "u", "g", "c"))
       .toDF("item_code", "item", "unit", "item_group", "item_category")
     val zip = SqlitePacker.pack(out, prices, premises, items)
+    val db = Paths.get(s"$out/pricecatcher.db")
+    val bytes = Files.readAllBytes(db)
 
-    assert(Files.exists(zip))
-    val load = Files.readString(Paths.get(s"$out/load.sql"))
-    assert(load.linesIterator.next() == ".read schema.sql",
-      "load.sql must bootstrap the DDL before importing")
-    for (t <- Seq("prices", "premises", "items")) {
-      val head = Files.readAllLines(Paths.get(s"$out/$t.csv")).get(0)
-      assert(!head.exists(_.isDigit), s"$t.csv must start with a header: $head")
-    }
+    // the reference ships one zip entry (main.rs:312-325)
+    val zf = new ZipFile(zip.toFile)
+    try {
+      assert(zf.entries().asScala.map(_.getName).toList == List("pricecatcher.db"))
+      val zipped = zf.getInputStream(zf.getEntry("pricecatcher.db")).readAllBytes()
+      assert(java.util.Arrays.equals(zipped, bytes), "zipped db differs from the file")
+    } finally zf.close()
 
-    // end-to-end through a real sqlite3 if one is installed: the
-    // load.sql path, and the native db's integrity and index lookups
+    // S7: the reference DDL (main.rs:192-207), as SQLite stores it in
+    // sqlite_master — without IF NOT EXISTS
+    val referenceDdl = Seq(
+      "CREATE TABLE IF NOT EXISTS prices (date VARCHAR(255), premise_code INTEGER, item_code INTEGER, price FLOAT)",
+      "CREATE INDEX IF NOT EXISTS idx_prices_premise_code ON prices (premise_code)",
+      "CREATE INDEX IF NOT EXISTS idx_prices_item_code ON prices (item_code)",
+      "CREATE TABLE IF NOT EXISTS premises (premise_code INTEGER, premise VARCHAR(255), address VARCHAR(255), premise_type VARCHAR(255), state VARCHAR(255), district VARCHAR(255))",
+      "CREATE UNIQUE INDEX IF NOT EXISTS idx_premises_premise_code ON premises (premise_code)",
+      "CREATE INDEX IF NOT EXISTS idx_premises_premise_type ON premises (premise_type)",
+      "CREATE INDEX IF NOT EXISTS idx_premises_state ON premises (state)",
+      "CREATE INDEX IF NOT EXISTS idx_premises_district ON premises (district)",
+      "CREATE TABLE IF NOT EXISTS items (item_code INTEGER, item VARCHAR(255), unit VARCHAR(255), item_group VARCHAR(255), item_category VARCHAR(255))",
+      "CREATE UNIQUE INDEX IF NOT EXISTS idx_items_item_code ON items (item_code)",
+      "CREATE INDEX IF NOT EXISTS idx_items_item_group ON items (item_group)",
+      "CREATE INDEX IF NOT EXISTS idx_items_item_category ON items (item_category)")
+      .map(_.replace(" IF NOT EXISTS", ""))
+    val DdlShape = """CREATE (?:UNIQUE )?(TABLE|INDEX) (\w+) (?:ON (\w+) )?\(.*""".r
+    val expected = referenceDdl.map { case sql @ DdlShape(kind, name, on) =>
+      (kind.toLowerCase, name, Option(on).getOrElse(name), sql) }
+    val master = SqliteFile.read(db, "sqlite_master")
+      .map(r => (r(0), r(1), r(2), r(4)))
+    assert(master.size == expected.size)
+    assert(master.toSet == expected.toSet)
+
+    // S9: nothing for VACUUM to reclaim — no freelist trunk and no free
+    // pages (header bytes 32-39), and the in-header page count covers
+    // the whole file
+    val header = ByteBuffer.wrap(bytes, 0, 100)
+    val pageSize = header.getShort(16) & 0xffff
+    assert(header.getInt(32) == 0 && header.getInt(36) == 0, "db has free pages")
+    assert(header.getInt(28).toLong * pageSize == bytes.length)
+
     if (hasSqlite3) {
-      val res = Process(
-        Seq("sqlite3", ":memory:", ".read load.sql",
-          "SELECT count(*) FROM prices;",
-          "SELECT typeof(price) FROM prices LIMIT 1;"),
-        new java.io.File(out)).!!.trim
-      assert(res.linesIterator.toSeq == Seq("2", "real"), s"sqlite3 load gave: $res")
-      val db = Process(Seq("sqlite3", s"$out/pricecatcher.db",
+      val res = Process(Seq("sqlite3", db.toString,
         "PRAGMA integrity_check;",
         "SELECT item FROM items INDEXED BY idx_items_item_code " +
-          "WHERE item_code = 11;")).!!.trim
-      assert(db.linesIterator.toSeq == Seq("ok", "I2"), s"pricecatcher.db gave: $db")
+          "WHERE item_code = 11;",
+        "SELECT count(*), typeof(price) FROM prices;")).!!.trim
+      assert(res.linesIterator.toSeq == Seq("ok", "I2", "2|real"),
+        s"pricecatcher.db gave: $res")
     }
   }
 
