@@ -37,6 +37,14 @@ object PriceCatcher {
       // we carry a total order instead.
       col("l_orderkey").as("__tb1"), col("l_linenumber").as("__tb2"))
 
+  /** Months (yyyy-MM) that hold fact rows, ascending. A distinct
+    * aggregate without a global sort: the few month strings (12 a year)
+    * are sorted on the driver. */
+  def months(spark: SparkSession, sfDir: String): Array[String] =
+    prices(spark, sfDir)
+      .select(date_format(col("date"), "yyyy-MM").as("m"))
+      .distinct().collect().map(_.getString(0)).sorted
+
   /** part → items (dimension), with P3 string cleaning. */
   def items(spark: SparkSession, sfDir: String): DataFrame =
     Tables.part(spark, sfDir).select(

@@ -2,10 +2,11 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.operators.Quality
 import graft.sources.SqlitePacker
 
 /** CLI pipeline driver with the reference's control contract
@@ -13,7 +14,10 @@ import graft.sources.SqlitePacker
   * selection (C1; the reference's interactive off-by-one C3 is
   * deliberately NOT replicated), up-to-date short-circuit with exit
   * code 1 (C4, reference src/main.rs:241-244), phase logging (C5), and
-  * the clean→dedup→enrich→pack data path.
+  * the clean→dedup→pack data path. Like the reference, the artifact
+  * stores the three tables unjoined; nothing is enriched here. A build
+  * that cannot finish (no months, unknown month, a UNIQUE index
+  * violation) exits 2, never 1.
   *
   * Offline re-scope of S1–S4: discovery enumerates fact months from the
   * input data instead of scraping a catalogue; the freshness probe
@@ -59,11 +63,21 @@ object PriceCatcherApp {
       sys.exit(1)
     }
 
+    try build(spark, sfDir, outDir, monthArg)
+    catch {
+      case NonFatal(e) =>
+        // exit 1 means "up to date" (C4): a failed build must not read so
+        System.err.println(s"Build failed: $e")
+        spark.stop(); sys.exit(2)
+    }
+    spark.stop()
+  }
+
+  private def build(spark: SparkSession, sfDir: String, outDir: String,
+                    monthArg: String): Unit = {
     // -- discovery + selection (C1/C2, offline re-scope of S1)
     println("Discover available months...")
-    val months = PriceCatcher.prices(spark, sfDir)
-      .select(date_format(col("date"), "yyyy-MM").as("m"))
-      .distinct().orderBy("m").collect().map(_.getString(0))
+    val months = PriceCatcher.months(spark, sfDir)
     if (months.isEmpty) {
       System.err.println(s"No fact months found under '$sfDir' — nothing to build.")
       spark.stop(); sys.exit(2)
@@ -85,21 +99,18 @@ object PriceCatcherApp {
     val premises = PriceCatcher.premises(spark, sfDir)
     val items = PriceCatcher.items(spark, sfDir)
 
-    // A2: dimension-key uniqueness, abort semantics of main.rs:42,57
-    Quality.assertUnique(premises, "premise_code")
-    Quality.assertUnique(items, "item_code")
-
     println("Filter latest prices...")
     val latest = graft.operators.Dedup.latestPerGroup(
       prices, Seq("premise_code", "item_code"),
       Seq(col("date").desc, col("__tb1").asc, col("__tb2").asc))
       .drop("__tb1", "__tb2")
-    println(s"Latest price rows: ${latest.count()}")
 
+    // A2: the UNIQUE indexes on premise_code and item_code abort the
+    // write on a duplicate key, as they abort the reference's load
+    // (main.rs:198,204); pack prints the latest-price row count
     println("Export artifact...")
     val path = SqlitePacker.pack(outDir, latest, premises, items)
     println(s"Packed: $path (${Files.size(path)} bytes)")
     println("Wrote pricecatcher.db (native SQLite file)")
-    spark.stop()
   }
 }

@@ -11,6 +11,10 @@ import org.apache.spark.sql.functions._
   * aggregation assertion: a groupBy-count over the key — one shuffle of
   * (key, partial count) pairs thanks to map-side combine, cheap even at
   * 100 TB because only distinct keys travel.
+  *
+  * The daily job (`PriceCatcherApp`) does not call it: the artifact's
+  * own UNIQUE indexes abort the write, as in the reference
+  * (`SqliteFile.write`). This form serves queries over the lake (q04).
   */
 object Quality {
 

@@ -520,12 +520,42 @@ object SqliteFile {
     h
   }
 
+  /** Key column names of a `CREATE UNIQUE INDEX` statement. */
+  private val UniqueIndexCols =
+    """(?is)CREATE\s+UNIQUE\s+INDEX\s.*?\sON\s+\S+\s*\((.*)\)\s*""".r
+
+  /** Enforce a UNIQUE index on its sorted entries (key columns + rowid):
+    * equal keys sit next to each other, and keys holding a NULL never
+    * conflict, as in SQLite. */
+  private def checkUnique(table: String, ix: IndexDef,
+                          sorted: IndexedSeq[Seq[Any]]): Unit =
+    ix.createSql match {
+      case UniqueIndexCols(cols) =>
+        val n = ix.keyCols.length
+        var i = 1
+        while (i < sorted.length) {
+          val (a, b) = (sorted(i - 1), sorted(i))
+          if ((0 until n).forall(c => a(c) != null && cmpVal(a(c), b(c)) == 0))
+            throw new IllegalStateException("UNIQUE constraint failed: " +
+              cols.split(',').map(c => s"$table.${c.trim.split("\\s+")(0)}")
+                .mkString(", "))
+          i += 1
+        }
+      case _ =>
+    }
+
   /** Write a database file containing `tables` and their index b-trees.
     * Returns pages written.
     *
     * Rowids are assigned 1..n in each table's iteration order, so the
     * file's bytes follow that order: a caller must not reorder rows if
     * its artifact is to stay byte-identical.
+    *
+    * An index whose DDL is `CREATE UNIQUE INDEX` is enforced like SQLite
+    * enforces it: two rows with equal, non-NULL keys abort the write with
+    * `IllegalStateException("UNIQUE constraint failed: <table>.<column>")`.
+    * Every page is built in memory before the file is opened, so an
+    * aborted write leaves no file at `path`.
     *
     * Memory: one table is held at a time, its rows and their encoded
     * records, plus the sorted entries of the one index being built. */
@@ -540,12 +570,12 @@ object SqliteFile {
       masterRows += Seq("table", t.name, t.name, root.toLong, t.createSql)
       t.indexes.foreach { ix =>
         // index entry = key columns + rowid, sorted in index order
-        val entries = rows.zipWithIndex
+        val sorted = rows.zipWithIndex
           .map { case (vals, i) =>
             (ix.keyCols.map(vals).toSeq :+ (i + 1L)): Seq[Any] }
           .sortWith(cmpRows)
-          .map(encodeRecord)
-        val iroot = buildIndexBtree(db, entries)
+        checkUnique(t.name, ix, sorted)
+        val iroot = buildIndexBtree(db, sorted.map(encodeRecord))
         masterRows += Seq("index", ix.name, t.name, iroot.toLong, ix.createSql)
       }
     }

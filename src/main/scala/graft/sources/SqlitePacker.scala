@@ -93,7 +93,10 @@ object SqlitePacker {
     }
 
   /** Write `pricecatcher.db` and its zip into `outDir`; returns the zip
-    * path. */
+    * path. The price rows are counted as they stream into the writer and
+    * printed once it is done, so the caller need not run `prices` twice.
+    * A duplicate premise or item code fails the UNIQUE index write, and
+    * neither the db nor the zip is written. */
   def pack(outDir: String, prices: DataFrame, premises: DataFrame,
            items: DataFrame): Path = {
     val dir = Paths.get(outDir)
@@ -102,11 +105,16 @@ object SqlitePacker {
       "items" -> items)
 
     val dbPath = dir.resolve("pricecatcher.db")
+    var priceRows = 0L
     SqliteFile.write(dbPath, tables.map { case (name, df) =>
       SqliteFile.TableDef(name, createTableSql(name),
-        stringified(df).toLocalIterator().asScala.map(sqlValues),
+        stringified(df).toLocalIterator().asScala.map { r =>
+          if (name == "prices") priceRows += 1
+          sqlValues(r)
+        },
         indexDefs.getOrElse(name, Nil))
     })
+    println(s"Latest price rows: $priceRows")
 
     // zip with deflate, matching the reference's packaging (main.rs:312-325)
     val zipPath = dir.resolve("pricecatcher.zip")

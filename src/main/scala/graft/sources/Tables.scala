@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftFooterGlue
 
 /** Source layer: parquet scans over the driver test tables.
   *
@@ -11,6 +12,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * reference: src/main.rs:60-66). At 100 TB the scan IS the query cost:
   * downstream operators must keep filters/projections as Column
   * expressions so Catalyst can push them into these scans.
+  *
+  * Every table is a single parquet file, so its schema is read from
+  * that file's footer on the driver (`GraftFooterGlue`, Spark's own
+  * footer reader and converter) and handed to the reader: no schema
+  * inference job runs per table.
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -30,15 +36,21 @@ object Tables {
   private def sessionKey(spark: SparkSession): Int =
     System.identityHashCode(spark)
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
     // events is NOT memoized here: its relation is only valid when
     // created under the nanosAsLong conf, so `events` caches its
     // CONVERTED frame below instead (a raw cache entry made without the
     // conf would poison every later events read)
-    if (name == "events") spark.read.parquet(s"$sfDir/$name.parquet")
-    else relCache.getOrElseUpdate(
-      (sessionKey(spark), s"$sfDir/$name.parquet"),
-      spark.read.parquet(s"$sfDir/$name.parquet"))
+    if (name == "events") read(spark, path)
+    else relCache.getOrElseUpdate((sessionKey(spark), path), read(spark, path))
+  }
+
+  /** A single-file parquet table with its schema read from the footer on
+    * the driver — the schema inference would give (TablesSpec pins the
+    * equality), without the inference job `spark.read.parquet` runs. */
+  private def read(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(GraftFooterGlue.schema(spark, path)).parquet(path)
 
   def region(spark: SparkSession, d: String): DataFrame = load(spark, d, "region")
   def nation(spark: SparkSession, d: String): DataFrame = load(spark, d, "nation")
@@ -69,7 +81,9 @@ object Tables {
     // change every later parquet read in the session (a read must not
     // have session-wide side effects). The DataFrame stays valid after
     // restore — the scan's hadoop conf is captured at relation creation,
-    // which .schema below forces (asserted by TablesSpec).
+    // which .schema below forces (asserted by TablesSpec). The footer
+    // schema is read inside the window too, so a TIMESTAMP(NANOS) `ts`
+    // converts to a long, as inference under the conf converts it.
     val key = "spark.sql.legacy.parquet.nanosAsLong"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, "true")

@@ -6,9 +6,10 @@ import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Minimal bridge into `private[sql]` surface: Column ⇄ Expression
   * conversion moved behind Spark 4's connect/classic split. This is the
-  * standard extension-library pattern (a single glue file inside the
-  * spark.sql package tree); everything else in this repo lives in
-  * `graft.*` and uses only public API.
+  * standard extension-library pattern (a glue file inside the
+  * spark.sql package tree; the parquet footer read has its own,
+  * `execution.datasources.parquet.GraftFooterGlue`); everything else in
+  * this repo lives in `graft.*` and uses only public API.
   */
 object GraftGlue {
   def column(e: Expression): Column = ExpressionUtils.column(e)

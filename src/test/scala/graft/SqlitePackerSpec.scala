@@ -205,7 +205,58 @@ class SqlitePackerSpec extends SparkSpec {
         "SELECT count(*), typeof(price) FROM prices;")).!!.trim
       assert(res.linesIterator.toSeq == Seq("ok", "I2", "2|real"),
         s"pricecatcher.db gave: $res")
+      // the stored UNIQUE index is live: sqlite3 refuses a duplicate key
+      val err = new StringBuilder
+      val rc = Process(Seq("sqlite3", db.toString,
+        "INSERT INTO items (item_code) VALUES (11);"))
+        .!(ProcessLogger(_ => (), line => err ++= line))
+      assert(rc != 0 && err.toString.contains("UNIQUE constraint failed"),
+        s"sqlite3 accepted a duplicate item_code (rc $rc): $err")
     }
+  }
+
+  test("UNIQUE index: a duplicate key aborts the write and leaves no file") {
+    val dir = Files.createTempDirectory("graft_sqlite_unique")
+    val path = dir.resolve("u.db")
+    def table(keys: Seq[Any]) = SqliteFile.TableDef("u",
+      "CREATE TABLE u (k INTEGER, v TEXT)",
+      keys.zipWithIndex.map { case (k, i) => Seq(k, s"v$i") }.iterator,
+      Seq(SqliteFile.IndexDef("idx_u_k", "CREATE UNIQUE INDEX idx_u_k ON u (k)",
+        Seq(0))))
+    val e = intercept[IllegalStateException] {
+      SqliteFile.write(path, Seq(table(Seq(3L, 1L, 2L, 1L))))
+    }
+    assert(e.getMessage == "UNIQUE constraint failed: u.k")
+    assert(!Files.exists(path), "an aborted write left a file")
+
+    // NULLs are distinct in a UNIQUE index, as in SQLite
+    SqliteFile.write(path, Seq(table(Seq(null, 1L, null, 2L, null))))
+    assert(SqliteFile.readIndex(path, "idx_u_k").map(_.head) ==
+      Seq(null, null, null, 1L, 2L))
+    if (hasSqlite3) {
+      val res = Process(Seq("sqlite3", path.toString,
+        "PRAGMA integrity_check;")).!!.trim
+      assert(res == "ok", res)
+    }
+    Files.delete(path)
+    Files.delete(dir)
+  }
+
+  test("pack aborts on a duplicate item code and writes neither db nor zip") {
+    val prices = Seq(("2001-01-01", 1L, 10L, 9.99))
+      .toDF("date", "premise_code", "item_code", "price")
+    val premises = Seq((1L, "P1", "addr", "t", "s", "d"))
+      .toDF("premise_code", "premise", "address", "premise_type", "state", "district")
+    val items = Seq((10L, "I1", "u", "g", "c"), (11L, "I2", "u", "g", "c"),
+      (10L, "I3", "u", "g", "c"))
+      .toDF("item_code", "item", "unit", "item_group", "item_category")
+    val out = Files.createTempDirectory("packer_unique")
+    val e = intercept[IllegalStateException] {
+      SqlitePacker.pack(out.toString, prices, premises, items)
+    }
+    assert(e.getMessage == "UNIQUE constraint failed: items.item_code")
+    assert(!Files.exists(out.resolve("pricecatcher.db")))
+    assert(!Files.exists(out.resolve("pricecatcher.zip")))
   }
 
   test("SqliteFile golden bytes: fixed input hashes to a pinned SHA-256") {

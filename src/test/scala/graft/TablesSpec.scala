@@ -98,6 +98,28 @@ class TablesSpec extends SparkSpec {
     }
   }
 
+  test("footer schemas equal spark.read.parquet inference for every table") {
+    // Tables.load reads each schema from the file footer on the driver;
+    // this keeps that path from drifting away from Spark's inference
+    for (dir <- Seq("sf0.001", "sf0.01", "sf0.1"); t <- Tables.all) {
+      val d = sf(dir)
+      val path = s"$d/$t.parquet"
+      if (t == "events") {
+        // the raw read and the footer both run under nanosAsLong
+        spark.conf.set(key, "true")
+        val (inferred, footer) =
+          try (spark.read.parquet(path), Tables.load(spark, d, t))
+          finally spark.conf.unset(key)
+        assert(footer.schema == inferred.schema, s"$dir/$t raw")
+        assert(Tables.events(spark, d).schema ==
+          Tables.normalizeTs(inferred).schema, s"$dir/$t accessor")
+      } else {
+        assert(Tables.load(spark, d, t).schema ==
+          spark.read.parquet(path).schema, s"$dir/$t")
+      }
+    }
+  }
+
   test("events.props keeps the single-integer-key contract shape") {
     // q76's oracle REBUILDS the minified Variant roundtrip as
     // '{"k":<int>}' from the extracted value — valid only while every

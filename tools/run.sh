@@ -4,7 +4,9 @@
 # build.sbt) but without sbt startup/lock overhead — useful when
 # iterating on measurements. Compile first: `sbt -batch compile`.
 set -euo pipefail
-CLS=/root/repo/target/scala-2.13/classes
+# classes of the checkout this script lives in, so a second checkout
+# (e.g. an A/B copy) runs its own build
+CLS="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)/target/scala-2.13/classes"
 JARS=/opt/spark/jars/'*'
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
