@@ -20,10 +20,6 @@ object PartitionedLake {
     df.withColumn("month", date_format(col(tsCol), "yyyy-MM"))
       .write.mode("overwrite").partitionBy("month").parquet(path)
 
-  /** Read one month — the `month` predicate prunes at planning time. */
-  def readMonth(spark: SparkSession, path: String, month: String): DataFrame =
-    spark.read.parquet(path).filter(col("month") === month)
-
   /** Run `body` with dynamic partition overwrite, restoring the
     * previous mode after (static mode — the default — would drop every
     * partition not present in the written frame: the classic silent
@@ -38,15 +34,6 @@ object PartitionedLake {
       case None => spark.conf.unset(key)
     }
   }
-
-  /** Incremental upsert: replaces ONLY the months present in `df`,
-    * leaving the rest of the decade untouched — the daily-ingest
-    * pattern matching the reference's one-month-per-run cadence. */
-  def upsertMonths(df: DataFrame, tsCol: String, path: String): Unit =
-    withDynamicOverwrite(df.sparkSession) {
-      df.withColumn("month", date_format(col(tsCol), "yyyy-MM"))
-        .write.mode("overwrite").partitionBy("month").parquet(path)
-    }
 
   /** Streaming-ingest upsert: write one micro-batch partitioned by
     * (month, ingest_batch). Dynamic overwrite replaces ONLY the
@@ -91,15 +78,6 @@ object PartitionedLake {
       df.write.mode("overwrite").partitionBy(partCol).parquet(path)
     }
 
-  /** Small-file compaction for one partition: rewrite a month's files
-    * into ~`targetFiles` outputs.
-    *
-    * Durability: the compacted data is first persisted to a temp
-    * directory on the same filesystem, then the partition is
-    * overwritten FROM that durable copy. Reading and overwriting the
-    * same files in one job (even behind cache()) is not safe — cached
-    * blocks can be evicted or lost mid-write and recomputation would
-    * read half-deleted source files. */
   /** Data-file count per `partCol` partition — the small-file health
     * metric a compaction decision reads. Driver-side FS listing:
     * metadata-scale (one directory listing per partition value), never
@@ -129,13 +107,14 @@ object PartitionedLake {
     * clusters each partition's rows into a single task (hash
     * repartition on the partition column), the partitioned write then
     * emits exactly one file per value; rows never cross partition
-    * values, so the rewrite is pure re-layout. [[compactMonth]]'s
-    * durable-copy rule applies — the compacted data is persisted to a
-    * sibling temp dir FIRST (outside `path`: the swap overwrites
-    * `path`'s partition dirs while reading the copy), because reading
-    * and overwriting the same files in one job is unsafe. A partition
+    * values, so the rewrite is pure re-layout. Durability: the
+    * compacted data is persisted to a sibling temp dir FIRST (outside
+    * `path`: the swap overwrites `path`'s partition dirs while reading
+    * the copy), because reading and overwriting the same files in one
+    * job is unsafe — cached blocks can be evicted or lost mid-write,
+    * and recomputation would read half-deleted source files. A partition
     * too large for one task takes a salt column next to `partCol` in
-    * the repartition (the q26/q42 discipline) to land `targetFiles`
+    * the repartition (the q26/q42 discipline) to land several files
     * instead of 1 — single-file is the fixture-scale shape. */
   def compactAll(spark: SparkSession, path: String, partCol: String): Unit = {
     val tmp = s"${path.stripSuffix("/")}__compact_tmp"
@@ -146,25 +125,6 @@ object PartitionedLake {
       withDynamicOverwrite(spark) {
         spark.read.parquet(tmp)
           .write.mode("overwrite").partitionBy(partCol).parquet(path)
-      }
-    finally {
-      val p = new org.apache.hadoop.fs.Path(tmp)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .delete(p, true)
-    }
-  }
-
-  def compactMonth(spark: SparkSession, path: String, month: String,
-                   targetFiles: Int = 1): Unit = {
-    val tmp = s"$path/.compact_tmp_$month"
-    readMonth(spark, path, month).drop("month")
-      .repartition(targetFiles)
-      .write.mode("overwrite").parquet(tmp)
-    try
-      withDynamicOverwrite(spark) {
-        spark.read.parquet(tmp)
-          .withColumn("month", lit(month))
-          .write.mode("overwrite").partitionBy("month").parquet(path)
       }
     finally {
       val p = new org.apache.hadoop.fs.Path(tmp)

@@ -43,16 +43,6 @@ object DocStreams {
   private def probeIndexPath(corpusPath: String): String =
     s"${corpusPath.stripSuffix("/")}/_probe_index"
 
-  /** Batch ids present as `ingest_batch=` partitions under `path` —
-    * driver-side listing, partition-count-sized. */
-  private def batchIds(path: String): Set[Long] = {
-    val dir = new java.io.File(path)
-    if (!dir.isDirectory) Set.empty
-    else Option(dir.listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.startsWith("ingest_batch="))
-      .map(_.getName.stripPrefix("ingest_batch=").toLong).toSet
-  }
-
   /** The probe-index row shape for a raw document frame: (doc_id, blk,
     * h, stoks) — 32-byte exact-probe key + sorted-distinct token set
     * (sorted so the verify stage's merge-intersect count applies). */
@@ -73,9 +63,14 @@ object DocStreams {
                   threshold: Double = 0.5): Unit = {
     val spark = delta.sparkSession
     val idxPath = probeIndexPath(corpusPath)
-    val corpusBatches = batchIds(corpusPath).filter(_ < batchId)
+    // earlier batches present as `ingest_batch=` partitions, listed
+    // through Hadoop FileSystem (a `file:` URI lists like a bare path)
+    def earlierBatches(path: String): Set[Long] =
+      PartitionedLake.partitionFileCounts(spark, path, "ingest_batch")
+        .keySet.map(_.toLong).filter(_ < batchId)
+    val corpusBatches = earlierBatches(corpusPath)
     val indexedBatches =
-      batchIds(idxPath).filter(_ < batchId).intersect(corpusBatches)
+      earlierBatches(idxPath).intersect(corpusBatches)
     val stored =
       if (indexedBatches.isEmpty) None
       else Some(spark.read.parquet(idxPath)

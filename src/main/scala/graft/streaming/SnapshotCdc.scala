@@ -33,8 +33,7 @@ import graft.sources.PartitionedLake
   * partition that appears in the written frame, so a bucket whose last
   * row died would silently keep its stale file if deletes removed
   * rows; (b) it is the real lakehouse practice — readers filter
-  * `alive`, compaction reclaims tombstones out of band
-  * ([[graft.sources.PartitionedLake.compactMonth]]'s job).
+  * `alive`, and a maintenance job reclaims tombstones out of band.
   *
   * Replay safety: every applied value is ABSOLUTE (balance := event
   * value, alive := constant), inserts are existence-guarded, and

@@ -54,17 +54,3 @@ object GraftGlue {
   def unloadStateStores(): Unit =
     org.apache.spark.sql.execution.streaming.state.StateStore.unloadAll()
 }
-
-/** Diagnostic bridge for SkewProbe (package-private AQE internals). */
-object GraftGlueDiag {
-  def skewSpecs(shuffleId: Int, reducerId: Int, targetSize: Long)
-      : (Seq[Long], Option[Int]) = {
-    val tracker = org.apache.spark.SparkEnv.get.mapOutputTracker
-      .asInstanceOf[org.apache.spark.MapOutputTrackerMaster]
-    val mapSizes = tracker.shuffleStatuses(shuffleId)
-      .withMapStatuses(_.map(_.getSizeForBlock(reducerId)))
-    val specs = org.apache.spark.sql.execution.adaptive.ShufflePartitionsUtil
-      .createSkewPartitionSpecs(shuffleId, reducerId, targetSize)
-    (mapSizes.toSeq, specs.map(_.length))
-  }
-}

@@ -71,6 +71,16 @@ class GraftLakeSourceSpec extends SparkSpec {
         |GROUP BY month ORDER BY month""".stripMargin)
       .as[(String, Long)].collect().toSeq
     assert(got == Seq(("1997-02", 20L), ("1997-03", 30L)))
+    // a month predicate in SQL prunes at the manifest like the
+    // DataFrame filter does
+    spark.sql(s"""CREATE OR REPLACE TEMPORARY VIEW graft_lake_latest
+      USING graftlake OPTIONS (path '$lake', partitionColumn 'month')""")
+    GraftLakeSource.lastScanParts.set(None)
+    assert(spark.sql(
+      "SELECT max(id) FROM graft_lake_latest WHERE month = '1997-02'")
+      .as[Long].head() == 4L)
+    assert(GraftLakeSource.lastScanParts.get().contains((3, 1)),
+      s"3 live partitions, 1 read: ${GraftLakeSource.lastScanParts.get()}")
   }
 
   test("manifest file sizes: every data entry records its exact " +
@@ -418,6 +428,11 @@ class GraftLakeSourceSpec extends SparkSpec {
       spark.sql("CREATE NAMESPACE graft3.c WITH PROPERTIES ('k'='v')") }
     intercept[Exception] { // location is base-derived
       spark.sql("CREATE NAMESPACE graft3.c LOCATION '/tmp/elsewhere'") }
+    // an EMPTY namespace drops without CASCADE
+    spark.sql("CREATE NAMESPACE graft3.e")
+    assert(names("SHOW NAMESPACES IN graft3") == Set("a", "e"))
+    spark.sql("DROP NAMESPACE graft3.e")
+    assert(names("SHOW NAMESPACES IN graft3") == Set("a"))
     // a table inside: the namespace is non-empty, and the table is
     // NOT listed as a namespace
     spark.sql("""CREATE TABLE graft3.a.t
@@ -438,6 +453,9 @@ class GraftLakeSourceSpec extends SparkSpec {
       "truncate is one more COMMIT, not a directory wipe")
     assert(VersionedLake.readVersion(spark, tPath, vBefore).count() == 2,
       "pre-truncate history intact (DV delete, files carried forward)")
+    assert(spark.sql("SELECT count(*) FROM graft3.a.t.files " +
+      "WHERE kind = 'dv'").head().getLong(0) == 2L,
+      "truncate minted one DV per touched partition")
     spark.sql("DROP NAMESPACE graft3.a CASCADE")
     assert(names("SHOW NAMESPACES IN graft3") == Set.empty)
     assert(spark.sql("SHOW NAMESPACES IN graft3").count() == 0)

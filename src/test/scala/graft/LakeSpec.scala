@@ -21,7 +21,9 @@ class LakeSpec extends SparkSpec {
     // rewrite one month with a single marker row
     val marker = li.limit(1)
       .withColumn("l_shipdate", lit(java.sql.Timestamp.valueOf("1998-03-15 00:00:00")))
-    PartitionedLake.upsertMonths(marker, "l_shipdate", lake)
+    PartitionedLake.overwriteBuckets(
+      marker.withColumn("month", date_format($"l_shipdate", "yyyy-MM")),
+      "month", lake)
 
     val after = spark.read.parquet(lake)
     assert(after.filter($"month" === "1998-03").count() == 1,
@@ -49,24 +51,6 @@ class LakeSpec extends SparkSpec {
     val expected = li.filter(date_format($"l_shipdate", "yyyy-MM") === "1998-03")
       .count()
     assert(q.count() == expected)
-  }
-
-  test("compaction reduces file count, preserves rows") {
-    val lake = java.nio.file.Files.createTempDirectory("lake_spec2").toString
-    val li = spark.read.parquet(s"${sf()}/lineitem.parquet")
-    // fragment one month into many files
-    PartitionedLake.upsertMonths(
-      li.filter(date_format($"l_shipdate", "yyyy-MM") === "1998-03")
-        .repartition(8),
-      "l_shipdate", lake)
-    def files(m: String) = new java.io.File(s"$lake/month=$m")
-      .listFiles().count(_.getName.endsWith(".parquet"))
-    val rowsBefore = PartitionedLake.readMonth(spark, lake, "1998-03").count()
-    assert(files("1998-03") == 8)
-
-    PartitionedLake.compactMonth(spark, lake, "1998-03", targetFiles = 1)
-    assert(files("1998-03") == 1)
-    assert(PartitionedLake.readMonth(spark, lake, "1998-03").count() == rowsBefore)
   }
 
   test("compactAll rewrites every partition to one file, same content") {

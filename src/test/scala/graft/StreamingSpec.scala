@@ -486,6 +486,29 @@ class StreamingSpec extends SparkSpec {
       Seq(1L, 2L, 5L))
   }
 
+  test("incremental dedup ingest on a file: URI corpus path still " +
+      "probes the earlier batches") {
+    import graft.model.Rows.Document
+    def doc(id: Long, text: String) =
+      Document(id, text, "en", "web", text.length.toLong)
+    val corpus = java.nio.file.Files
+      .createTempDirectory("stream_dedup_uri").toUri.toString
+    assert(corpus.startsWith("file:"), corpus)
+    val first = doc(1, "alpha beta gamma delta epsilon")
+    graft.streaming.DocStreams.ingestBatch(
+      Seq(first).toDS().toDF(), 0L, corpus)
+    // batch 1 repeats batch 0's document next to a novel one: the
+    // repeat must find batch 0 through the URI and drop
+    graft.streaming.DocStreams.ingestBatch(
+      Seq(first, doc(2, "totally novel content here now")).toDS().toDF(),
+      1L, corpus)
+    val store = spark.read.parquet(corpus)
+    assert(store.filter($"ingest_batch" === 1 && $"doc_id" === 1L)
+      .count() == 0, "the repeated document was admitted again")
+    assert(store.select($"doc_id").as[Long].collect().sorted.toSeq ==
+      Seq(1L, 2L))
+  }
+
   test("embed ingest dedup: delta probes the ACCUMULATED lake index; " +
       "replay idempotent; accumulated pairs == full rebuild") {
     import graft.model.Rows.Embedding
