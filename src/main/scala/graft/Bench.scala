@@ -57,16 +57,25 @@ object Bench {
     // byte-identical code — GC debt from the preceding queries taxed
     // the measured runs) must not bill to this query
     def quiesce(): Unit = { System.gc(); System.gc() }
+    // a failed run says why on stderr (outside the timed region) —
+    // the JSON line only carries its -1
+    def failed(name: String, e: Throwable): Unit =
+      System.err.println(s"$name: ${e.getClass.getName}: ${e.getMessage}")
     val results = runners.map { case (name, fn) =>
       quiesce()
-      try fn(spark, sfDir) catch { case _: Throwable => () } // warmup
+      // warmup
+      try fn(spark, sfDir) catch { case e: Throwable => failed(name, e) }
       val times = (1 to measuredRuns).map { _ =>
         quiesce()
         val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir); true }
-                 catch { case _: Throwable => false }
+        val err = try { fn(spark, sfDir); None }
+                  catch { case e: Throwable => Some(e) }
+        val t1 = System.nanoTime()
         // a failed query reports -1, never a plausible-looking duration
-        if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+        err match {
+          case None => (t1 - t0) / 1e9
+          case Some(e) => failed(name, e); -1.0
+        }
       }
       name -> (if (times.contains(-1.0)) -1.0 else times.min)
     }

@@ -566,7 +566,7 @@ private[graft] object EntryDefsA {
   private[graft] def l01(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
       .select("doc_id", "text", "lang", "source", "n_chars")
-    val out = s"/tmp/graft_jsonl_${Integer.toHexString(d.hashCode)}"
+    val out = Scratch.path("jsonl", d)
     docs.write.mode("overwrite").json(out)
     val back = s.read.schema(docs.schema).json(out)
     def sig(df: DataFrame, n: String, g: String) = df.agg(
@@ -590,7 +590,7 @@ private[graft] object EntryDefsA {
   private[graft] def l03(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
       .select("doc_id", "text", "lang", "source", "n_chars")
-    val out = s"/tmp/graft_orc_${Integer.toHexString(d.hashCode)}"
+    val out = Scratch.path("orc", d)
     docs.write.mode("overwrite").option("compression", "zlib").orc(out)
     val back = s.read.schema(docs.schema).orc(out)
     def sig(df: DataFrame, n: String, g: String) = df.agg(
@@ -618,7 +618,7 @@ private[graft] object EntryDefsA {
   private[graft] def l05(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
       .select("doc_id", "text", "lang", "source", "n_chars")
-    val out = s"/tmp/graft_avro_${Integer.toHexString(d.hashCode)}"
+    val out = Scratch.path("avro", d)
     graft.sources.AvroLake.write(docs, out)
     val back = graft.sources.AvroLake.read(s, out).toDF()
     def sig(df: DataFrame, n: String, g: String) = df.agg(
@@ -646,7 +646,7 @@ private[graft] object EntryDefsA {
     * free. Oracle: recomputes the whole join+aggregate from the
     * original parquet, gating the write→prune→join→agg path. */
   private[graft] def l06(s: SparkSession, d: String): DataFrame = {
-    val lake = s"/tmp/graft_dpp_${Integer.toHexString(d.hashCode)}"
+    val lake = Scratch.path("dpp", d)
     graft.sources.PartitionedLake.writeByMonth(
       Tables.lineitem(s, d).select("l_orderkey", "l_quantity", "l_shipdate"),
       "l_shipdate", lake)
@@ -682,7 +682,7 @@ private[graft] object EntryDefsA {
     * many tiny ingests), not the operator under test. */
   private[graft] def l07(s: SparkSession, d: String): DataFrame = {
     import graft.sources.PartitionedLake
-    val lake = s"/tmp/graft_compact_${Integer.toHexString(d.hashCode)}"
+    val lake = Scratch.path("compact", d)
     val docs = Tables.documents(s, d).select("doc_id", "lang", "n_chars")
     (0 to 3).foreach { r =>
       docs.filter(pmod(col("doc_id"), lit(4)) === r).coalesce(1)
@@ -730,7 +730,7 @@ private[graft] object EntryDefsA {
   private[graft] def l08(s: SparkSession, d: String): DataFrame = {
     import graft.sources.VersionedLake
     val lake = zoneMapLakeCache.getOrElseUpdate(d, {
-      val p = s"/tmp/graft_zonemap_${Integer.toHexString(d.hashCode)}"
+      val p = Scratch.path("zonemap", d)
       VersionedLake.reset(s, p)
       VersionedLake.commitOverwrite(
         Tables.lineitem(s, d)
@@ -841,7 +841,7 @@ private[graft] object EntryDefsA {
     * the concurrent-reader-sees-old-version guarantee. */
   private[graft] def l09(s: SparkSession, d: String): DataFrame = {
     import graft.sources.VersionedLake
-    val lake = s"/tmp/graft_ttlake_${Integer.toHexString(d.hashCode)}"
+    val lake = Scratch.path("ttlake", d)
     VersionedLake.reset(s, lake) // deterministic two-commit history
     val li = ttSlimLineitem(s, d)
     VersionedLake.commitOverwrite(li, "month", lake)
@@ -872,7 +872,7 @@ private[graft] object EntryDefsA {
     * snapshots from the original parquet. */
   private[graft] def l10(s: SparkSession, d: String): DataFrame = {
     import graft.sources.VersionedLake
-    val lake = s"/tmp/graft_vaclake_${Integer.toHexString(d.hashCode)}"
+    val lake = Scratch.path("vaclake", d)
     VersionedLake.reset(s, lake)
     val li = ttSlimLineitem(s, d)
     VersionedLake.commitOverwrite(li, "month", lake)
@@ -922,7 +922,7 @@ private[graft] object EntryDefsA {
     * (Delta errors on multiple source matches for the same reason). */
   private[graft] def l11(s: SparkSession, d: String): DataFrame = {
     import graft.sources.VersionedLake
-    val lake = s"/tmp/graft_mergelake_${Integer.toHexString(d.hashCode)}"
+    val lake = Scratch.path("mergelake", d)
     VersionedLake.reset(s, lake)
     val li = ttSlimLineitem(s, d, dedupKeys = true)
     VersionedLake.commitOverwrite(li, "month", lake)
@@ -956,7 +956,7 @@ private[graft] object EntryDefsA {
     * the construction. */
   private[graft] def l15(s: SparkSession, d: String): DataFrame = {
     import graft.sources.VersionedLake
-    val lake = s"/tmp/graft_mdlake_${Integer.toHexString(d.hashCode)}"
+    val lake = Scratch.path("mdlake", d)
     VersionedLake.reset(s, lake)
     val li = ttSlimLineitem(s, d, dedupKeys = true)
     VersionedLake.commitOverwrite(li, "month", lake)
@@ -995,7 +995,7 @@ private[graft] object EntryDefsA {
     * both from the original parquet. */
   private[graft] def l16(s: SparkSession, d: String): DataFrame = {
     import graft.sources.VersionedLake
-    val lake = s"/tmp/graft_evlake_${Integer.toHexString(d.hashCode)}"
+    val lake = Scratch.path("evlake", d)
     VersionedLake.reset(s, lake)
     val li = ttSlimLineitem(s, d)
     VersionedLake.commitOverwrite(li, "month", lake)
@@ -1034,7 +1034,7 @@ private[graft] object EntryDefsA {
     * parallelism-dependent, the l10 discipline). */
   private[graft] def l17(s: SparkSession, d: String): DataFrame = {
     import graft.sources.VersionedLake
-    val lake = s"/tmp/graft_zolake_${Integer.toHexString(d.hashCode)}"
+    val lake = Scratch.path("zolake", d)
     VersionedLake.reset(s, lake)
     val li = ttSlimLineitem(s, d)
     VersionedLake.commitOverwrite(
@@ -1087,7 +1087,7 @@ private[graft] object EntryDefsA {
     * resolved snapshot from the original parquet. */
   private[graft] def l18(s: SparkSession, d: String): DataFrame = {
     import graft.sources.VersionedLake
-    val lake = s"/tmp/graft_aslake_${Integer.toHexString(d.hashCode)}"
+    val lake = Scratch.path("aslake", d)
     VersionedLake.reset(s, lake)
     val li = ttSlimLineitem(s, d)
     VersionedLake.commitOverwrite(li, "month", lake,
@@ -1138,7 +1138,7 @@ private[graft] object EntryDefsA {
   private[graft] def l19Impl(s: SparkSession, d: String,
                       rebuildCheck: Boolean): DataFrame = {
     import graft.sources.VersionedLake
-    val lake = s"/tmp/graft_ivmlake_${Integer.toHexString(d.hashCode)}"
+    val lake = Scratch.path("ivmlake", d)
     VersionedLake.reset(s, lake)
     val li = ttSlimLineitem(s, d, dedupKeys = true)
       .select(col("l_orderkey"), col("l_linenumber"), col("month"),
@@ -1215,10 +1215,9 @@ private[graft] object EntryDefsA {
     * by construction. */
   private[graft] def l20(s: SparkSession, d: String): DataFrame = {
     import graft.sources.VersionedLake
-    val h = Integer.toHexString(d.hashCode)
-    val src = s"/tmp/graft_clsrc_$h"
-    val sh = s"/tmp/graft_clsh_$h"
-    val dp = s"/tmp/graft_cldp_$h"
+    val src = Scratch.path("clsrc", d)
+    val sh = Scratch.path("clsh", d)
+    val dp = Scratch.path("cldp", d)
     Seq(src, sh, dp).foreach(VersionedLake.reset(s, _))
     val li = ttSlimLineitem(s, d)
     VersionedLake.commitOverwrite(li, "month", src)
@@ -1258,7 +1257,7 @@ private[graft] object EntryDefsA {
     * parquet. */
   private[graft] def l21(s: SparkSession, d: String): DataFrame = {
     import graft.sources.VersionedLake
-    val lake = s"/tmp/graft_rstlake_${Integer.toHexString(d.hashCode)}"
+    val lake = Scratch.path("rstlake", d)
     VersionedLake.reset(s, lake)
     val li = ttSlimLineitem(s, d)
     VersionedLake.commitOverwrite(li, "month", lake)
@@ -1293,7 +1292,7 @@ private[graft] object EntryDefsA {
     * cursor loop against a live streaming ingest. */
   private[graft] def l22(s: SparkSession, d: String): DataFrame = {
     import graft.sources.VersionedLake
-    val lake = s"/tmp/graft_applake_${Integer.toHexString(d.hashCode)}"
+    val lake = Scratch.path("applake", d)
     VersionedLake.reset(s, lake)
     val li = ttSlimLineitem(s, d)
     Seq("1997-01", "1997-02", "1997-03").foreach { m =>
@@ -1337,7 +1336,7 @@ private[graft] object EntryDefsA {
     * original parquet. */
   private[graft] def l23(s: SparkSession, d: String): DataFrame = {
     import graft.sources.VersionedLake
-    val lake = s"/tmp/graft_dvlake_${Integer.toHexString(d.hashCode)}"
+    val lake = Scratch.path("dvlake", d)
     VersionedLake.reset(s, lake)
     val li = ttSlimLineitem(s, d, dedupKeys = true)
     VersionedLake.commitOverwrite(li, "month", lake)
@@ -1386,7 +1385,7 @@ private[graft] object EntryDefsA {
     * probe from the original parquet by construction. */
   private[graft] def l24(s: SparkSession, d: String): DataFrame = {
     import graft.sources.VersionedLake
-    val lake = s"/tmp/graft_cmlake_${Integer.toHexString(d.hashCode)}"
+    val lake = Scratch.path("cmlake", d)
     VersionedLake.reset(s, lake)
     val li = ttSlimLineitem(s, d, dedupKeys = true)
     VersionedLake.commitOverwrite(li, "month", lake)
@@ -1450,7 +1449,7 @@ private[graft] object EntryDefsA {
     * DV/column-mapping composition. */
   private[graft] def l25(s: SparkSession, d: String): DataFrame = {
     import graft.sources.VersionedLake
-    val lake = s"/tmp/graft_seglake_${Integer.toHexString(d.hashCode)}"
+    val lake = Scratch.path("seglake", d)
     VersionedLake.reset(s, lake)
     VersionedLake.enableSegmentedManifests(s, lake)
     val li = ttSlimLineitem(s, d, dedupKeys = true)
@@ -1500,7 +1499,7 @@ private[graft] object EntryDefsA {
     * original parquet. */
   private[graft] def l26(s: SparkSession, d: String): DataFrame = {
     import graft.sources.VersionedLake
-    val lake = s"/tmp/graft_cklake_${Integer.toHexString(d.hashCode)}"
+    val lake = Scratch.path("cklake", d)
     VersionedLake.reset(s, lake)
     val li = ttSlimLineitem(s, d, dedupKeys = true)
     VersionedLake.commitOverwrite(li, "month", lake)
@@ -1572,9 +1571,8 @@ private[graft] object EntryDefsA {
     * partition loses rows and fails the counts. */
   private[graft] def l27(s: SparkSession, d: String): DataFrame = {
     import graft.sources.{HiddenPartitioning => HP, VersionedLake}
-    val hex = Integer.toHexString(d.hashCode)
-    val lakeA = s"/tmp/graft_hplake_a_$hex"
-    val lakeB = s"/tmp/graft_hplake_b_$hex"
+    val lakeA = Scratch.path("hplake_a", d)
+    val lakeB = Scratch.path("hplake_b", d)
     VersionedLake.reset(s, lakeA)
     VersionedLake.reset(s, lakeB)
     val li = Tables.lineitem(s, d)
@@ -1637,7 +1635,7 @@ private[graft] object EntryDefsA {
     * and the evolution refusals. */
   private[graft] def l31(s: SparkSession, d: String): DataFrame = {
     import graft.sources.{HiddenPartitioning => HP, VersionedLake}
-    val lake = s"/tmp/graft_spevlake_${Integer.toHexString(d.hashCode)}"
+    val lake = Scratch.path("spevlake", d)
     VersionedLake.reset(s, lake)
     val li = Tables.lineitem(s, d)
       .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
@@ -1692,7 +1690,7 @@ private[graft] object EntryDefsA {
     * and the DV/widening composition. */
   private[graft] def l34(s: SparkSession, d: String): DataFrame = {
     import graft.sources.{GraftLakeSource, VersionedLake}
-    val lake = s"/tmp/graft_dsv2lake_${Integer.toHexString(d.hashCode)}"
+    val lake = Scratch.path("dsv2lake", d)
     VersionedLake.reset(s, lake)
     val li = ttSlimLineitem(s, d)
     VersionedLake.commitOverwrite(li, "month", lake)
@@ -1748,7 +1746,7 @@ private[graft] object EntryDefsA {
     * shape (temp views, INSERT INTO, the catalog). */
   private[graft] def l35(s: SparkSession, d: String): DataFrame = {
     import graft.sources.VersionedLake
-    val lake = s"/tmp/graft_dsv2wlake_${Integer.toHexString(d.hashCode)}"
+    val lake = Scratch.path("dsv2wlake", d)
     VersionedLake.reset(s, lake)
     val li = Tables.lineitem(s, d)
       .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
@@ -1808,7 +1806,7 @@ private[graft] object EntryDefsA {
     * to the narrow era and the rename composition. */
   private[graft] def l32(s: SparkSession, d: String): DataFrame = {
     import graft.sources.VersionedLake
-    val lake = s"/tmp/graft_twlake_${Integer.toHexString(d.hashCode)}"
+    val lake = Scratch.path("twlake", d)
     VersionedLake.reset(s, lake)
     val li = Tables.lineitem(s, d)
       .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
@@ -1880,7 +1878,7 @@ private[graft] object EntryDefsA {
     * — a wrongly skipped file loses rows and fails the counts. */
   private[graft] def l28(s: SparkSession, d: String): DataFrame = {
     import graft.sources.{BloomIndex, VersionedLake}
-    val lake = s"/tmp/graft_bflake_${Integer.toHexString(d.hashCode)}"
+    val lake = Scratch.path("bflake", d)
     VersionedLake.reset(s, lake)
     val li = Tables.lineitem(s, d)
       .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
@@ -1954,7 +1952,7 @@ private[graft] object EntryDefsA {
     * version resolving to the wrong snapshot all fail the row. */
   private[graft] def l29(s: SparkSession, d: String): DataFrame = {
     import graft.sources.VersionedLake
-    val lake = s"/tmp/graft_histlake_${Integer.toHexString(d.hashCode)}"
+    val lake = Scratch.path("histlake", d)
     VersionedLake.reset(s, lake)
     val li = ttSlimLineitem(s, d, dedupKeys = true)
     VersionedLake.commitOverwrite(li, "month", lake)
@@ -2002,7 +2000,7 @@ private[graft] object EntryDefsA {
     * key/src signatures from the original parquet. */
   private[graft] def l30(s: SparkSession, d: String): DataFrame = {
     import graft.sources.VersionedLake
-    val lake = s"/tmp/graft_melake_${Integer.toHexString(d.hashCode)}"
+    val lake = Scratch.path("melake", d)
     VersionedLake.reset(s, lake)
     val li = ttSlimLineitem(s, d, dedupKeys = true)
     VersionedLake.commitOverwrite(li, "month", lake)
@@ -2059,7 +2057,7 @@ private[graft] object EntryDefsA {
     * materialization and the OCC races. */
   private[graft] def l33(s: SparkSession, d: String): DataFrame = {
     import graft.sources.VersionedLake
-    val lake = s"/tmp/graft_mdvlake_${Integer.toHexString(d.hashCode)}"
+    val lake = Scratch.path("mdvlake", d)
     VersionedLake.reset(s, lake)
     val li = ttSlimLineitem(s, d, dedupKeys = true)
     VersionedLake.commitOverwrite(li, "month", lake)
@@ -2109,7 +2107,7 @@ private[graft] object EntryDefsA {
     * skip_effective asserts >= half the files never opened. */
   private[graft] def l12(s: SparkSession, d: String): DataFrame = {
     import graft.sources.VersionedLake
-    val lake = s"/tmp/graft_zvlake_${Integer.toHexString(d.hashCode)}"
+    val lake = Scratch.path("zvlake", d)
     VersionedLake.reset(s, lake)
     val li = ttSlimLineitem(s, d)
     def clustered(df: DataFrame, n: Int): DataFrame =
@@ -2154,7 +2152,7 @@ private[graft] object EntryDefsA {
     * retention window. */
   private[graft] def l14(s: SparkSession, d: String): DataFrame = {
     import graft.sources.VersionedLake
-    val lake = s"/tmp/graft_optlake_${Integer.toHexString(d.hashCode)}"
+    val lake = Scratch.path("optlake", d)
     VersionedLake.reset(s, lake)
     val li = ttSlimLineitem(s, d)
     VersionedLake.commitOverwrite(
@@ -2209,10 +2207,9 @@ private[graft] object EntryDefsA {
     * either instant would miss the hash. */
   private[graft] def l36(s: SparkSession, d: String): DataFrame = {
     import graft.sources.{CommitCoordinator => CC, VersionedLake}
-    val h = Integer.toHexString(d.hashCode)
-    val lakeA = s"/tmp/graft_coordlake_a_$h"
-    val lakeB = s"/tmp/graft_coordlake_b_$h"
-    val coord = s"/tmp/graft_coordlog_$h"
+    val lakeA = Scratch.path("coordlake_a", d)
+    val lakeB = Scratch.path("coordlake_b", d)
+    val coord = Scratch.path("coordlog", d)
     Seq(lakeA, lakeB, coord).foreach(VersionedLake.reset(s, _))
     val li = Tables.lineitem(s, d)
       .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
@@ -2276,7 +2273,7 @@ private[graft] object EntryDefsA {
     * (partCol rename; a range no spec projects). */
   private[graft] def l37(s: SparkSession, d: String): DataFrame = {
     import graft.sources.{HiddenPartitioning => HP, VersionedLake}
-    val lake = s"/tmp/graft_spxclake_${Integer.toHexString(d.hashCode)}"
+    val lake = Scratch.path("spxclake", d)
     VersionedLake.reset(s, lake)
     val li = Tables.lineitem(s, d)
       .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
@@ -2340,7 +2337,7 @@ private[graft] object EntryDefsA {
     * GraftLakeSourceSpec, which also drives the SQL-user shape. */
   private[graft] def l38(s: SparkSession, d: String): DataFrame = {
     import graft.sources.VersionedLake
-    val lake = s"/tmp/graft_sqldellake_${Integer.toHexString(d.hashCode)}"
+    val lake = Scratch.path("sqldellake", d)
     VersionedLake.reset(s, lake)
     val li = Tables.lineitem(s, d)
       .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
@@ -2408,10 +2405,8 @@ private[graft] object EntryDefsA {
     * r12 per-partition-counter rule), so the row is
     * partition-invariant. */
   private[graft] def l39(s: SparkSession, d: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val wh = s"/tmp/graft_cat_wh_${Integer.toHexString(d.hashCode)}"
-    val f = new Path(wh).getFileSystem(s.sparkContext.hadoopConfiguration)
-    f.delete(new Path(wh), true)
+    val wh = Scratch.path("cat_wh", d)
+    Scratch.wipe(wh)
     s.conf.set("spark.sql.catalog.l39cat",
       "graft.sources.GraftLakeCatalog")
     s.conf.set("spark.sql.catalog.l39cat.base", wh)

@@ -34,7 +34,7 @@ private[graft] object EntryDefsB {
     * restatement's construction. */
   private[graft] def l13(s: SparkSession, d: String): DataFrame = {
     import graft.sources.VersionedLake
-    val lake = s"/tmp/graft_cdflake_${Integer.toHexString(d.hashCode)}"
+    val lake = Scratch.path("cdflake", d)
     VersionedLake.reset(s, lake)
     val li = ttSlimLineitem(s, d, dedupKeys = true)
     VersionedLake.commitOverwrite(li, "month", lake)
@@ -72,7 +72,7 @@ private[graft] object EntryDefsB {
     * to one count). */
   private[graft] def l02(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d).select("doc_id", "lang", "n_chars")
-    val out = s"/tmp/graft_csv_${Integer.toHexString(d.hashCode)}"
+    val out = Scratch.path("csv", d)
     docs.select(concat(
         col("doc_id").cast("string"), lit(","), col("lang"), lit(","),
         when(col("doc_id") % 97 === 0, lit("N/A"))
@@ -101,7 +101,7 @@ private[graft] object EntryDefsB {
     * and the batch-split rule, never touching the staged files. */
   private[graft] def l04(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-    val out = s"/tmp/graft_evo_${Integer.toHexString(d.hashCode)}"
+    val out = Scratch.path("evo", d)
     docs.filter(col("doc_id") % 2 === 0)
       .select(col("doc_id"), col("lang"), col("n_chars"))
       .write.mode("overwrite").parquet(s"$out/batch=a")
@@ -701,7 +701,7 @@ private[graft] object EntryDefsB {
     val tables = Similarity.nearDupTables(n, dim, 0.4)
     val base = emb.filter(col("vec_id") % 4 =!= 3)
     val delta = emb.filter(col("vec_id") % 4 === 3)
-    val idx = s"/tmp/graft_lshidx_${Integer.toHexString(d.hashCode)}"
+    val idx = Scratch.path("lshidx", d)
     Similarity.bandTable(base, tables).write.mode("overwrite").parquet(idx)
     val inc = Similarity
       .probeNearDupDelta(delta, s.read.parquet(idx), base, 0.4, tables)
@@ -742,18 +742,12 @@ private[graft] object EntryDefsB {
     * executes per takedown is one `retractIds` call — Bench measures
     * that form against a prebuilt index (benchOverrides rule). */
   private[graft] def d15(s: SparkSession, d: String): DataFrame = {
-    import java.nio.file.{Files, Path, Paths}
-    def wipe(p: Path): Unit =
-      if (Files.exists(p))
-        Files.walk(p).sorted(java.util.Comparator.reverseOrder[Path]())
-          .forEach(f => { Files.deleteIfExists(f); () })
     val emb = Tables.embeddings(s, d)
     val (n, dim) = Similarity.corpusStats(emb)
     val tables = Similarity.nearDupTables(n, dim, 0.4)
-    val hex = Integer.toHexString(d.hashCode)
-    val idxA = s"/tmp/graft_takedown_a_$hex"
-    val idxB = s"/tmp/graft_takedown_b_$hex"
-    wipe(Paths.get(idxA)); wipe(Paths.get(idxB))
+    val idxA = Scratch.path("takedown_a", d)
+    val idxB = Scratch.path("takedown_b", d)
+    Scratch.wipe(idxA); Scratch.wipe(idxB)
     val b0 = emb.filter(col("vec_id") % 4 =!= 3)
     val b1 = emb.filter(col("vec_id") % 4 === 3)
     graft.streaming.EmbedStreams.ingestBatch(b0, 0L, idxA, tables, 0.4)
@@ -934,7 +928,7 @@ private[graft] object EntryDefsB {
     val (n, dim) = Similarity.corpusStats(emb)
     // the SAME tuning lshTopK auto-derives (simFloor .25, recall .9)
     val tables = Similarity.nearDupTables(n, dim, 0.25, targetRecall = 0.9)
-    val idx = s"/tmp/graft_lshsearch_${Integer.toHexString(d.hashCode)}"
+    val idx = Scratch.path("lshsearch", d)
     Similarity.bandTable(emb, tables).write.mode("overwrite").parquet(idx)
     val q = emb.filter(col("vec_id") < 10)
     val approx = Similarity
@@ -990,7 +984,7 @@ private[graft] object EntryDefsB {
   private[graft] def s18(s: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(s, d)
     val q = emb.filter(col("vec_id") < 10)
-    val root = s"/tmp/graft_ivfadc_${Integer.toHexString(d.hashCode)}"
+    val root = Scratch.path("ivfadc", d)
     val built = Similarity.buildIvfAdcIndex(emb, m = 16)
     built.centroids.write.mode("overwrite").parquet(s"$root/centroids")
     built.codebook.write.mode("overwrite").parquet(s"$root/codebook")
@@ -1082,7 +1076,7 @@ private[graft] object EntryDefsB {
     import graft.sources.VersionedLake
     val emb = Tables.embeddings(s, d)
     val idx = cachedIvfAdcIndex(s, d)
-    val lake = s"/tmp/graft_codeslake_${Integer.toHexString(d.hashCode)}"
+    val lake = Scratch.path("codeslake", d)
     VersionedLake.reset(s, lake)
     val delta = emb.filter(col("vec_id") % 10 < 4)
       .withColumn("vec_id", col("vec_id") + 200000L)
@@ -1151,7 +1145,7 @@ private[graft] object EntryDefsB {
     import graft.sources.VersionedLake
     val emb = Tables.embeddings(s, d)
     val idx = cachedIvfAdcIndex(s, d)
-    val lake = s"/tmp/graft_cdtdlake_${Integer.toHexString(d.hashCode)}"
+    val lake = Scratch.path("cdtdlake", d)
     VersionedLake.reset(s, lake)
     val delta = emb.filter(col("vec_id") % 10 < 4)
       .withColumn("vec_id", col("vec_id") + 200000L)

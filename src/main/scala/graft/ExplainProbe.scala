@@ -43,8 +43,7 @@ object ExplainProbe {
         sha2(col("text"), 256).as("h"),
         sort_array(graft.functions.TextFunctions.tokenSet(col("text")))
           .as("stoks"))
-    val idx = s"/tmp/graft_probe_index_explain_" +
-      Integer.toHexString(sfDir.hashCode)
+    val idx = Scratch.path("probe_index_explain", sfDir)
     graft.sources.PartitionedLake.upsertBatchKeyed(prep(corpus), 0L, idx)
     println("\n===== st11 per-batch probe, INDEXED form (r16: stored " +
       "(doc_id, blk, h, stoks) rows only — no text in any ReadSchema) " +

@@ -33,14 +33,15 @@ import graft.sources.PartitionedLake
   */
 object EmbedStreams {
 
+  /** Whether `path` holds `ingest_batch=` partitions, listed through
+    * Hadoop FileSystem (a `file:` URI lists like a bare path). */
+  private def hasBatches(spark: SparkSession, path: String): Boolean =
+    PartitionedLake.partitionFileCounts(spark, path, "ingest_batch").nonEmpty
+
   private def storeOrEmpty(spark: SparkSession, path: String,
-                           empty: => DataFrame): DataFrame = {
-    val dir = new java.io.File(path)
-    val hasData = dir.isDirectory && Option(dir.listFiles())
-      .exists(_.exists(_.getName.startsWith("ingest_batch=")))
-    if (hasData) spark.read.parquet(path)
+                           empty: => DataFrame): DataFrame =
+    if (hasBatches(spark, path)) spark.read.parquet(path)
     else empty.withColumn("ingest_batch", lit(-1L))
-  }
 
   /** One micro-batch: probe `delta` against the index accumulated by
     * batches BEFORE `batchId`, write the found near-dup pairs under
@@ -93,10 +94,7 @@ object EmbedStreams {
       .distinct()
     def purge(store: String, keyCols: Seq[String]): Unit = {
       val path = s"$indexPath/$store"
-      val dir = new java.io.File(path)
-      val hasData = dir.isDirectory && Option(dir.listFiles())
-        .exists(_.exists(_.getName.startsWith("ingest_batch=")))
-      if (hasData) {
+      if (hasBatches(s, path)) {
         val df = s.read.parquet(path)
         val marked = keyCols.foldLeft(df.withColumn("__hit", lit(false))) {
           (acc, k) =>
@@ -119,15 +117,10 @@ object EmbedStreams {
                     .as("ingest_batch")).distinct(),
                   Seq("ingest_batch"), "left_anti")
                 .collect().map(_.getLong(0)) // takedown-list-sized
-              emptied.foreach { b =>
-                val p = java.nio.file.Paths.get(path, s"ingest_batch=$b")
-                if (java.nio.file.Files.exists(p))
-                  java.nio.file.Files.walk(p)
-                    .sorted(java.util.Comparator
-                      .reverseOrder[java.nio.file.Path]())
-                    .forEach(f =>
-                      { java.nio.file.Files.deleteIfExists(f); () })
-              }
+              val root = new org.apache.hadoop.fs.Path(path)
+              val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+              emptied.foreach(b => fs.delete(
+                new org.apache.hadoop.fs.Path(root, s"ingest_batch=$b"), true))
             }
         }
       }

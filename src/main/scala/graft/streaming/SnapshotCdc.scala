@@ -87,9 +87,9 @@ object SnapshotCdc {
   def applyBatchToStore(batch: DataFrame, storePath: String,
                         nBuckets: Int = 64): Unit = {
     val s = batch.sparkSession
-    val dir = new java.io.File(storePath)
-    val hasData = dir.isDirectory && Option(dir.listFiles())
-      .exists(_.exists(_.getName.startsWith("bucket=")))
+    // listed through Hadoop FileSystem: a `file:` URI lists like a path
+    val hasData = PartitionedLake
+      .partitionFileCounts(s, storePath, "bucket").nonEmpty
     val affected = batch
       .select(pmod(col("user_id"), lit(nBuckets.toLong)).as("bucket"))
       .distinct()

@@ -509,6 +509,71 @@ class StreamingSpec extends SparkSpec {
       Seq(1L, 2L))
   }
 
+  /** A fresh temp dir spelled as a `file:` URI (no trailing slash). */
+  private def uriDir(prefix: String): String = {
+    val p = java.nio.file.Files.createTempDirectory(prefix).toUri.toString
+      .stripSuffix("/")
+    assert(p.startsWith("file:"), p)
+    p
+  }
+
+  test("embed ingest on a file: URI index path still probes the " +
+      "earlier batches") {
+    import graft.model.Rows.Embedding
+    import graft.operators.Similarity
+    val tables = Similarity.nearDupTables(8L, 4, 0.9)
+    val idx = uriDir("embed_uri")
+    graft.streaming.EmbedStreams.ingestBatch(
+      Seq(Embedding(1, Array(1f, 0f, 0f, 0f), 0)).toDS().toDF(), 0L, idx,
+      tables, threshold = 0.9)
+    // batch 1's vector is a near-dup of batch 0's: it must find batch 0
+    // through the URI
+    graft.streaming.EmbedStreams.ingestBatch(
+      Seq(Embedding(2, Array(1f, 0.01f, 0f, 0f), 0)).toDS().toDF(), 1L,
+      idx, tables, threshold = 0.9)
+    assert(spark.read.parquet(s"$idx/pairs").select($"id_a", $"id_b")
+      .as[(Long, Long)].collect().toSet == Set((1L, 2L)))
+  }
+
+  test("index takedown on a file: URI index path purges every batch") {
+    import graft.model.Rows.Embedding
+    import graft.operators.Similarity
+    val tables = Similarity.nearDupTables(8L, 4, 0.9)
+    val idx = uriDir("embed_takedown_uri")
+    graft.streaming.EmbedStreams.ingestBatch(
+      Seq(Embedding(1, Array(1f, 0f, 0f, 0f), 0)).toDS().toDF(), 0L, idx,
+      tables, threshold = 0.9)
+    graft.streaming.EmbedStreams.ingestBatch(
+      Seq(Embedding(2, Array(0f, 1f, 0f, 0f), 0),
+        Embedding(3, Array(0f, 0f, 1f, 0f), 0)).toDS().toDF(), 1L, idx,
+      tables, threshold = 0.9)
+    // the takedown must see both ingested batches through the URI:
+    // id 2 leaves batch 1, and id 1 empties batch 0's partition
+    graft.streaming.EmbedStreams.retractIds(Seq(1L, 2L).toDF("vec_id"), idx)
+    val vecs = spark.read.parquet(s"$idx/vecs")
+    assert(vecs.select($"vec_id").as[Long].collect().toSeq == Seq(3L))
+    assert(!new java.io.File(new java.net.URI(s"$idx/vecs/ingest_batch=0"))
+      .exists(), "the emptied batch-0 partition must be removed")
+  }
+
+  test("snapshot CDC on a file: URI store path reads the earlier " +
+      "batches") {
+    def e(id: Long, t: String, user: Long, typ: String, v: Double) =
+      Event(id, Timestamp.valueOf(t), user, typ, v, "{}")
+    val store = uriDir("stream_snap_uri")
+    graft.streaming.SnapshotCdc.applyBatchToStore(
+      Seq(e(1, "2024-01-01 00:01:00", 1, "purchase", 10.0)).toDS().toDF(),
+      store, nBuckets = 4)
+    // batch 1's click updates user 1 — only if batch 0's store is seen
+    // (a click on an unknown user inserts nothing)
+    graft.streaming.SnapshotCdc.applyBatchToStore(
+      Seq(e(2, "2024-01-02 00:01:00", 1, "click", 12.5)).toDS().toDF(),
+      store, nBuckets = 4)
+    assert(spark.read.parquet(store)
+      .select($"user_id", $"balance", $"alive")
+      .as[(Long, Double, Boolean)].collect().toSeq == Seq((1L, 12.5, true)))
+  }
+
   test("embed ingest dedup: delta probes the ACCUMULATED lake index; " +
       "replay idempotent; accumulated pairs == full rebuild") {
     import graft.model.Rows.Embedding
