@@ -23,6 +23,15 @@ import graft.sources.SqlitePacker
   * input data instead of scraping a catalogue; the freshness probe
   * compares input mtimes against the packed artifact.
   *
+  * Phase order: the freshness check; then `premises` and `items` start
+  * building and collecting on their own threads
+  * ([[SqlitePacker.withDimensions]]) while this thread discovers months
+  * and selects one; then the latest-price plan for that month streams
+  * into the writer, which takes the dimension rows when it reaches
+  * them; then the zip. `prices` always waits for the month selection,
+  * for `--month latest` and an explicit month alike. Every exit-2 path
+  * waits for the dimension threads to end before the session stops.
+  *
   * Usage: PriceCatcherApp <sfDir> <outDir> [--month latest|yyyy-MM]
   */
 object PriceCatcherApp {
@@ -63,41 +72,46 @@ object PriceCatcherApp {
       sys.exit(1)
     }
 
-    try build(spark, sfDir, outDir, monthArg)
-    catch {
-      case NonFatal(e) =>
+    val failure =
+      try {
+        SqlitePacker.withDimensions(PriceCatcher.premises(spark, sfDir),
+          PriceCatcher.items(spark, sfDir)) { dims =>
+          build(spark, sfDir, outDir, monthArg, dims)
+        }
+        None
+      } catch {
+        case Abort(msg) => Some(msg)
         // exit 1 means "up to date" (C4): a failed build must not read so
-        System.err.println(s"Build failed: $e")
-        spark.stop(); sys.exit(2)
-    }
+        case NonFatal(e) => Some(s"Build failed: $e")
+      }
     spark.stop()
+    failure.foreach { msg => System.err.println(msg); sys.exit(2) }
   }
 
+  /** A build that stops on its own terms: the message goes to stderr and
+    * the app exits 2. */
+  private final case class Abort(msg: String) extends Exception(msg)
+
   private def build(spark: SparkSession, sfDir: String, outDir: String,
-                    monthArg: String): Unit = {
+                    monthArg: String, dims: SqlitePacker.Dimensions): Unit = {
     // -- discovery + selection (C1/C2, offline re-scope of S1)
     println("Discover available months...")
     val months = PriceCatcher.months(spark, sfDir)
-    if (months.isEmpty) {
-      System.err.println(s"No fact months found under '$sfDir' — nothing to build.")
-      spark.stop(); sys.exit(2)
-    }
+    if (months.isEmpty)
+      throw Abort(s"No fact months found under '$sfDir' — nothing to build.")
     println(s"Found ${months.length} months: ${months.head}..${months.last}")
     val month = monthArg match {
       case "latest" => months.last
       case m if months.contains(m) => m
-      case m =>
-        System.err.println(s"Unknown month '$m'; available: ${months.mkString(", ")}")
-        spark.stop(); sys.exit(2); ""
+      case m => throw Abort(
+        s"Unknown month '$m'; available: ${months.mkString(", ")}")
     }
     println(s"Selected month: $month")
 
     // -- build (C5 phase logging mirrors main.rs:246-282)
     println("Build database...")
     val prices = PriceCatcher.prices(spark, sfDir)
-      .filter(date_format(col("date"), "yyyy-MM") === month)
-    val premises = PriceCatcher.premises(spark, sfDir)
-    val items = PriceCatcher.items(spark, sfDir)
+      .filter(PriceCatcher.inMonth(month))
 
     println("Filter latest prices...")
     val latest = graft.operators.Dedup.latestPerGroup(
@@ -109,7 +123,7 @@ object PriceCatcherApp {
     // write on a duplicate key, as they abort the reference's load
     // (main.rs:198,204); pack prints the latest-price row count
     println("Export artifact...")
-    val path = SqlitePacker.pack(outDir, latest, premises, items)
+    val path = SqlitePacker.pack(outDir, latest, dims)
     println(s"Packed: $path (${Files.size(path)} bytes)")
     println("Wrote pricecatcher.db (native SQLite file)")
   }

@@ -53,13 +53,16 @@ case class Md5Draw52(child: Expression) extends UnaryExpression {
                 |catch (java.security.NoSuchAlgorithmException e) {
                 |  throw new RuntimeException(e); }""".stripMargin)
       val h = ctx.freshName("h")
+      // operators end the lines: Spark strips margins again when it
+      // splices this code into its own templates, so no line may start
+      // with `|`
       s"""
          |$digest.reset();
          |byte[] $h = $digest.digest($s.getBytes());
-         |${ev.value} = (($h[0] & 0xFFL) << 44) | (($h[1] & 0xFFL) << 36)
-         |  | (($h[2] & 0xFFL) << 28) | (($h[3] & 0xFFL) << 20)
-         |  | (($h[4] & 0xFFL) << 12) | (($h[5] & 0xFFL) << 4)
-         |  | (($h[6] & 0xF0L) >>> 4);
+         |${ev.value} = (($h[0] & 0xFFL) << 44) | (($h[1] & 0xFFL) << 36) |
+         |  (($h[2] & 0xFFL) << 28) | (($h[3] & 0xFFL) << 20) |
+         |  (($h[4] & 0xFFL) << 12) | (($h[5] & 0xFFL) << 4) |
+         |  (($h[6] & 0xF0L) >>> 4);
          |""".stripMargin
     })
 
@@ -178,6 +181,7 @@ case class Md5DrawKey52(children: Seq[Expression]) extends Expression {
       }
     }.mkString("\n")
     val childCode = evs.map(_.code.toString).mkString("\n")
+    // operators end the lines, as in Md5Draw52.doGenCode
     ev.copy(code =
       code"""
         |$childCode
@@ -187,10 +191,10 @@ case class Md5DrawKey52(children: Seq[Expression]) extends Expression {
         |  $digest.reset();
         |  $updates
         |  byte[] $h = $digest.digest();
-        |  ${ev.value} = (($h[0] & 0xFFL) << 44) | (($h[1] & 0xFFL) << 36)
-        |    | (($h[2] & 0xFFL) << 28) | (($h[3] & 0xFFL) << 20)
-        |    | (($h[4] & 0xFFL) << 12) | (($h[5] & 0xFFL) << 4)
-        |    | (($h[6] & 0xF0L) >>> 4);
+        |  ${ev.value} = (($h[0] & 0xFFL) << 44) | (($h[1] & 0xFFL) << 36) |
+        |    (($h[2] & 0xFFL) << 28) | (($h[3] & 0xFFL) << 20) |
+        |    (($h[4] & 0xFFL) << 12) | (($h[5] & 0xFFL) << 4) |
+        |    (($h[6] & 0xF0L) >>> 4);
         |}""".stripMargin)
   }
 

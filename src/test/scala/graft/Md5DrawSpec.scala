@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.execution.WholeStageCodegenExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import org.apache.spark.sql.functions._
 
 import graft.plans.Md5Draw52
@@ -88,5 +91,34 @@ class Md5DrawSpec extends SparkSpec {
       .select(chain(concat(lit(-42L).cast("string"), lit(":x"),
         lit(7).cast("string"))).as("v")).head().getLong(0)
     assert(e.eval(null) == viaSql)
+  }
+
+  test("md5_draw52 and md5_draw52_key compile inside a whole-stage " +
+      "aggregate") {
+    import graft.plans.Md5DrawKey52.md5DrawKey52
+    // with fallback off, generated Java that does not compile fails the
+    // query instead of running the stage interpreted
+    val fallback = "spark.sql.codegen.fallback"
+    val before = spark.conf.getOption(fallback)
+    spark.conf.set(fallback, "false")
+    try {
+      val rendered = concat($"id".cast("string"), lit(":bs"))
+      val got = spark.range(0, 2000).groupBy(($"id" % 7).as("g"))
+        .agg(sum(Md5Draw52.md5Draw52(rendered)).as("a"),
+          sum(md5DrawKey52($"id", lit(":bs"))).as("b"),
+          sum(chain(rendered)).as("c"))
+      val rows = got.collect()
+      assert(rows.length == 7)
+      rows.foreach(r => assert(r.getLong(1) == r.getLong(3) &&
+        r.getLong(2) == r.getLong(3), r.toString))
+      val fused = new AdaptiveSparkPlanHelper {}
+        .collect(got.queryExecution.executedPlan) {
+          case w: WholeStageCodegenExec
+              if w.child.exists(_.isInstanceOf[HashAggregateExec]) => w }
+      assert(fused.nonEmpty, got.queryExecution.executedPlan.toString)
+    } finally before match {
+      case Some(v) => spark.conf.set(fallback, v)
+      case None => spark.conf.unset(fallback)
+    }
   }
 }

@@ -1,12 +1,17 @@
 package graft
 
+import java.io.FileInputStream
 import java.nio.ByteBuffer
 import java.nio.file.{Files, Path, Paths}
 import java.security.MessageDigest
-import java.util.zip.ZipFile
+import java.util.zip.{CRC32, Deflater, ZipFile, ZipInputStream}
 
 import scala.jdk.CollectionConverters._
 import scala.sys.process._
+import scala.util.Random
+
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 import graft.sources.{SqliteFile, SqlitePacker}
 
@@ -27,6 +32,36 @@ class SqlitePackerSpec extends SparkSpec {
     * 100-byte file header). */
   private def pageType(bytes: Array[Byte], no: Int): Int =
     bytes((no - 1) * 4096 + (if (no == 1) 100 else 0)) & 0xff
+
+  /** The packer's worker threads (dimension collects, deflate chunks)
+    * that are still alive. */
+  private def packerThreads: Set[String] =
+    Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.getName.startsWith("pricecatcher-") && t.isAlive)
+      .map(_.getName).toSet
+
+  /** Zip `bytes` as `pricecatcher.db` through the packer's chunked
+    * deflate; returns the zip. */
+  private def chunkedZip(bytes: Array[Byte]): Path = {
+    val dir = Files.createTempDirectory("graft_zip")
+    val db = Files.write(dir.resolve("pricecatcher.db"), bytes)
+    val zip = dir.resolve("pricecatcher.zip")
+    SqlitePacker.zip(db, zip)
+    zip
+  }
+
+  /** Bytes of a single-stream raw deflate at level 9. */
+  private def singleStreamDeflated(bytes: Array[Byte]): Long = {
+    val d = new Deflater(9, true)
+    try {
+      d.setInput(bytes)
+      d.finish()
+      val buf = new Array[Byte](64 * 1024)
+      var n = 0L
+      while (!d.finished()) n += d.deflate(buf)
+      n
+    } finally d.end()
+  }
 
   /** Root page of `name` as recorded in sqlite_master. */
   private def rootOf(path: Path, name: String): Int =
@@ -154,6 +189,7 @@ class SqlitePackerSpec extends SparkSpec {
     val items = Seq((10L, "I1", "u", "g", "c"), (11L, "I2", "u", "g", "c"))
       .toDF("item_code", "item", "unit", "item_group", "item_category")
     val zip = SqlitePacker.pack(out, prices, premises, items)
+    assert(packerThreads.isEmpty, s"threads outlived pack: $packerThreads")
     val db = Paths.get(s"$out/pricecatcher.db")
     val bytes = Files.readAllBytes(db)
 
@@ -257,6 +293,91 @@ class SqlitePackerSpec extends SparkSpec {
     assert(e.getMessage == "UNIQUE constraint failed: items.item_code")
     assert(!Files.exists(out.resolve("pricecatcher.db")))
     assert(!Files.exists(out.resolve("pricecatcher.zip")))
+  }
+
+  test("pack surfaces a failed dimension collect's own exception, " +
+      "writes nothing and leaves no thread") {
+    val prices = Seq(("2001-01-01", 1L, 10L, 9.99))
+      .toDF("date", "premise_code", "item_code", "price")
+    val premises = Seq((1L, "P1", "addr", "t", "s", "d"))
+      .toDF("premise_code", "premise", "address", "premise_type", "state", "district")
+    // fails in a task, not at planning: spark.range is no local relation
+    val items = spark.range(10, 13).select($"id".as("item_code"),
+      when($"id" === 12L, raise_error(lit("item 12 is malformed")))
+        .cast(StringType).as("item"),
+      lit("u").as("unit"), lit("g").as("item_group"),
+      lit("c").as("item_category"))
+    val out = Files.createTempDirectory("packer_dim_failure")
+    val e = intercept[Exception] {
+      SqlitePacker.pack(out.toString, prices, premises, items)
+    }
+    assert(!e.isInstanceOf[java.util.concurrent.ExecutionException], e)
+    assert(e.getMessage.contains("item 12 is malformed"), e)
+    assert(Files.list(out).count() == 0, "a failed pack left files")
+    assert(packerThreads.isEmpty, s"threads outlived pack: $packerThreads")
+  }
+
+  test("chunked zip round-trips through ZipFile and ZipInputStream") {
+    val chunk = SqlitePacker.ChunkSize
+    val rnd = new Random(7)
+    val text = (0 until 60000).map(i => s"row $i ${i % 97};").mkString.getBytes
+    val inputs = Seq(
+      "empty" -> Array.emptyByteArray,
+      "one byte" -> Array[Byte](42),
+      "one chunk" -> text.take(chunk - 1000),
+      "two whole chunks" -> text.take(2 * chunk),
+      "several chunks" -> text,
+      "incompressible" -> Array.fill(3 * chunk + 17)(rnd.nextInt().toByte))
+    assert(text.length > 4 * chunk && text.length % chunk != 0)
+    inputs.foreach { case (label, bytes) =>
+      val crc = new CRC32
+      crc.update(bytes)
+      val zip = chunkedZip(bytes)
+      val zf = new ZipFile(zip.toFile)
+      val compressed = try {
+        assert(zf.entries().asScala.map(_.getName).toList ==
+          List("pricecatcher.db"), label)
+        val e = zf.getEntry("pricecatcher.db")
+        assert(e.getMethod == java.util.zip.ZipEntry.DEFLATED, label)
+        assert(e.getCrc == crc.getValue, label)
+        assert(e.getSize == bytes.length, label)
+        assert(java.util.Arrays.equals(
+          zf.getInputStream(e).readAllBytes(), bytes), label)
+        e.getCompressedSize
+      } finally zf.close()
+      // the streaming reader checks the local header's sizes and CRC
+      // against the data it inflates
+      val zis = new ZipInputStream(new FileInputStream(zip.toFile))
+      try {
+        val e = zis.getNextEntry
+        assert(e.getName == "pricecatcher.db", label)
+        assert(java.util.Arrays.equals(zis.readAllBytes(), bytes), label)
+        assert(e.getCrc == crc.getValue && e.getSize == bytes.length &&
+          e.getCompressedSize == compressed, label)
+        assert(zis.getNextEntry == null, label)
+      } finally zis.close()
+      assert(packerThreads.isEmpty, s"$label: $packerThreads")
+    }
+  }
+
+  test("the packed sf0.01 db zips no larger than one deflate stream") {
+    val d = sf("sf0.01")
+    val month = PriceCatcher.months(spark, d).find(_ == "1995-03").get
+    val latest = graft.operators.Dedup.latestPerGroup(
+      PriceCatcher.prices(spark, d).filter(PriceCatcher.inMonth(month)),
+      Seq("premise_code", "item_code"),
+      Seq(col("date").desc, col("__tb1").asc, col("__tb2").asc))
+      .drop("__tb1", "__tb2")
+    val out = Files.createTempDirectory("packer_sf001")
+    val zip = SqlitePacker.pack(out.toString, latest,
+      PriceCatcher.premises(spark, d), PriceCatcher.items(spark, d))
+    val db = Files.readAllBytes(out.resolve("pricecatcher.db"))
+    assert(db.length > SqlitePacker.ChunkSize, "db fits one chunk")
+    val zf = new ZipFile(zip.toFile)
+    val chunked = try zf.getEntry("pricecatcher.db").getCompressedSize
+      finally zf.close()
+    val single = singleStreamDeflated(db)
+    assert(chunked <= single, s"chunked $chunked B > single stream $single B")
   }
 
   test("SqliteFile golden bytes: fixed input hashes to a pinned SHA-256") {
