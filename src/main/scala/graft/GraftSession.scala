@@ -33,11 +33,4 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .withExtensions(new graft.plans.GraftExtensions)
   }
-
-  /** Guidance for sizing the shuffle: one partition per ~128 MB of
-    * shuffled data keeps reducers in memory without small-task
-    * overhead. */
-  def targetShufflePartitions(shuffledBytes: Long,
-                              bytesPerPartition: Long = 128L << 20): Int =
-    math.max(1, math.ceil(shuffledBytes.toDouble / bytesPerPartition).toInt)
 }

@@ -90,16 +90,18 @@ object PriceCatcher {
         Cleaning.cleanString(col("r_name")).as("district"))
   }
 
-  /** Latest price per premise×item (A1) with deterministic tie-break. */
-  def latestPrices(spark: SparkSession, sfDir: String): DataFrame =
+  /** Latest price per premise×item (A1, src/main.rs:252-278) of a
+    * [[prices]] frame, whole or filtered, with a deterministic
+    * tie-break; the tie-break columns are dropped. */
+  def latestPrices(prices: DataFrame): DataFrame =
     Dedup.latestPerGroup(
-      prices(spark, sfDir),
+      prices,
       keys = Seq("premise_code", "item_code"),
       order = Seq(col("date").desc, col("__tb1").asc, col("__tb2").asc))
       .drop("__tb1", "__tb2")
 
   /** Full flagship result: latest prices enriched with both dimensions. */
   def run(spark: SparkSession, sfDir: String): DataFrame =
-    Enrich.enrich(latestPrices(spark, sfDir),
+    Enrich.enrich(latestPrices(prices(spark, sfDir)),
                   items(spark, sfDir), premises(spark, sfDir))
 }

@@ -4,8 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.sources.SqlitePacker
 
@@ -26,9 +25,10 @@ import graft.sources.SqlitePacker
   * Phase order: the freshness check; then `premises` and `items` start
   * building and collecting on their own threads
   * ([[SqlitePacker.withDimensions]]) while this thread discovers months
-  * and selects one; then the latest-price plan for that month streams
-  * into the writer, which takes the dimension rows when it reaches
-  * them; then the zip. `prices` always waits for the month selection,
+  * and selects one ([[selectMonth]]); then the latest-price plan for
+  * that month ([[latestFor]]) streams into the writer
+  * ([[SqlitePacker.pack]]), which takes the dimension rows when it
+  * reaches them; then the zip. `prices` always waits for the month selection,
   * for `--month latest` and an explicit month alike. Every exit-2 path
   * waits for the dimension threads to end before the session stops.
   *
@@ -76,7 +76,15 @@ object PriceCatcherApp {
       try {
         SqlitePacker.withDimensions(PriceCatcher.premises(spark, sfDir),
           PriceCatcher.items(spark, sfDir)) { dims =>
-          build(spark, sfDir, outDir, monthArg, dims)
+          val month = selectMonth(spark, sfDir, monthArg)
+          val latest = latestFor(spark, sfDir, month)
+          // A2: the UNIQUE indexes on premise_code and item_code abort the
+          // write on a duplicate key, as they abort the reference's load
+          // (main.rs:198,204); pack prints the latest-price row count
+          println("Export artifact...")
+          val path = SqlitePacker.pack(outDir, latest, dims)
+          println(s"Packed: $path (${Files.size(path)} bytes)")
+          println("Wrote pricecatcher.db (native SQLite file)")
         }
         None
       } catch {
@@ -89,16 +97,20 @@ object PriceCatcherApp {
   }
 
   /** A build that stops on its own terms: the message goes to stderr and
-    * the app exits 2. */
-  private final case class Abort(msg: String) extends Exception(msg)
+    * the app exits 2. Messages are ASCII, so they read the same on a
+    * stderr whose charset is ASCII. */
+  final case class Abort(msg: String) extends Exception(msg)
 
-  private def build(spark: SparkSession, sfDir: String, outDir: String,
-                    monthArg: String, dims: SqlitePacker.Dimensions): Unit = {
-    // -- discovery + selection (C1/C2, offline re-scope of S1)
+  /** Phase 1, discover and select (C1/C2, offline re-scope of S1): the
+    * fact months under `sfDir`, and the one `monthArg` names (`latest`
+    * or `yyyy-MM`). Throws [[Abort]] when there are no months or
+    * `monthArg` names none of them. */
+  def selectMonth(spark: SparkSession, sfDir: String,
+                  monthArg: String): String = {
     println("Discover available months...")
     val months = PriceCatcher.months(spark, sfDir)
     if (months.isEmpty)
-      throw Abort(s"No fact months found under '$sfDir' — nothing to build.")
+      throw Abort(s"No fact months found under '$sfDir'; nothing to build.")
     println(s"Found ${months.length} months: ${months.head}..${months.last}")
     val month = monthArg match {
       case "latest" => months.last
@@ -107,24 +119,17 @@ object PriceCatcherApp {
         s"Unknown month '$m'; available: ${months.mkString(", ")}")
     }
     println(s"Selected month: $month")
+    month
+  }
 
-    // -- build (C5 phase logging mirrors main.rs:246-282)
+  /** Phase 2, plan latest (C5 phase logging mirrors main.rs:246-282): the
+    * latest price per premise and item among `month`'s fact rows. Only a
+    * plan; [[SqlitePacker.pack]] runs it. */
+  def latestFor(spark: SparkSession, sfDir: String, month: String): DataFrame = {
     println("Build database...")
     val prices = PriceCatcher.prices(spark, sfDir)
       .filter(PriceCatcher.inMonth(month))
-
     println("Filter latest prices...")
-    val latest = graft.operators.Dedup.latestPerGroup(
-      prices, Seq("premise_code", "item_code"),
-      Seq(col("date").desc, col("__tb1").asc, col("__tb2").asc))
-      .drop("__tb1", "__tb2")
-
-    // A2: the UNIQUE indexes on premise_code and item_code abort the
-    // write on a duplicate key, as they abort the reference's load
-    // (main.rs:198,204); pack prints the latest-price row count
-    println("Export artifact...")
-    val path = SqlitePacker.pack(outDir, latest, dims)
-    println(s"Packed: $path (${Files.size(path)} bytes)")
-    println("Wrote pricecatcher.db (native SQLite file)")
+    PriceCatcher.latestPrices(prices)
   }
 }

@@ -10,8 +10,9 @@ import org.apache.spark.sql.graftglue.GraftGlue
   * kept fresh, how a streaming drive's checkpoint is created and torn
   * down, and how a session conf is scoped to one body. Registry
   * entries (EntryDefsA/B/C, EntryDrives, SparkEntry, ExplainProbe) go
-  * through it and hold no copy of these decisions; ScratchSpec pins
-  * that. */
+  * through it and hold no copy of these decisions; [[withConf]] is the
+  * only conf save/restore in main code (the source layer's events read
+  * and dynamic overwrite use it too). ScratchSpec pins both. */
 private[graft] object Scratch {
 
   /** `/tmp/graft_<name>_<hex(d.hashCode)>` — one stable path per

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType}
+import org.apache.spark.sql.types.LongType
 
 /** Cleaning / coercion projections (SURVEY.md §2.2, P1–P4).
   *
@@ -24,6 +24,10 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   *  - P4 dirty-row tolerance asymmetry: fact-table coercion failure fails
   *    the job (panic, src/main.rs:24-26) while a bad dimension key just
   *    drops the row with a log (src/main.rs:44).
+  *
+  * The daily job's three tables are projected once, in
+  * [[graft.PriceCatcher]], from these column functions; `cleanPremises`
+  * applies them to the reference's raw premise shape (double key, P4).
   */
 object Cleaning {
 
@@ -44,7 +48,6 @@ object Cleaning {
     * instead of job failure. Pair with [[dropDirtyRows]] for the
     * dimension path (P4). */
   def tryLong(c: Column): Column = c.cast("string").try_cast("long")
-  def tryDouble(c: Column): Column = c.cast("string").try_cast("double")
 
   /** P3 — trim, then default NULL (or all-whitespace → empty is kept as
     * the trimmed value, matching the reference which trims but does not
@@ -57,17 +60,6 @@ object Cleaning {
     * just for a log line is wasteful, so we leave the count optional). */
   def dropDirtyRows(df: DataFrame, keyCol: String): DataFrame =
     df.filter(col(keyCol).isNotNull)
-
-  /** Full cleaning of a raw PriceCatcher fact frame
-    * (date,premise_code,item_code,price — src/main.rs:20). Fail-fast
-    * semantics: plain casts, so a malformed value errors the job under
-    * ANSI mode just as the reference panics. */
-  def cleanPrices(raw: DataFrame): DataFrame =
-    raw.select(
-      truncToDate(col("date")).as("date"),
-      col("premise_code").cast(LongType).as("premise_code"),
-      col("item_code").cast(LongType).as("item_code"),
-      col("price").cast(DoubleType).as("price"))
 
   /** Full cleaning of the premises dimension (src/main.rs:31-46):
     * double key rounded to long, bad keys dropped (P4), strings
@@ -82,13 +74,4 @@ object Cleaning {
       cleanString(col("district")).as("district"))
     dropDirtyRows(coerced, "premise_code")
   }
-
-  /** Full cleaning of the items dimension (src/main.rs:49-58). */
-  def cleanItems(raw: DataFrame): DataFrame =
-    raw.select(
-      col("item_code").cast(LongType).as("item_code"),
-      cleanString(col("item")).as("item"),
-      cleanString(col("unit")).as("unit"),
-      cleanString(col("item_group")).as("item_group"),
-      cleanString(col("item_category")).as("item_category"))
 }

@@ -1,38 +1,20 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
-/** Bucketed storage for shuffle-free co-located joins.
+/** Clustered writes: organize a table's files at write time so later
+  * reads skip most of them.
   *
-  * At 100 TB, the dominant cost of a large⋈large equi-join is shuffling
-  * both sides. Writing both tables bucketed by the join key with the
-  * same bucket count lets Spark's SortMergeJoin read matching buckets
-  * directly — `explain` shows NO Exchange on either side. This is the
-  * Spark-native equivalent of the reference's "co-locate everything in
-  * one database file with join-key indexes" (reference:
-  * src/main.rs:194-206): pay organization cost once at write time, join
-  * for free forever after.
-  *
-  * Bucket count guidance: ~(table size / 128 MB) rounded to a power of
-  * two shared by both join sides; too few buckets → giant tasks, too
-  * many → small-file pressure.
+  * Co-located joins need no helper here: writing both sides with
+  * Spark's own `bucketBy(n, key).saveAsTable` at the same bucket count
+  * lets SortMergeJoin read matching buckets with no Exchange on either
+  * side, the Spark-native form of the reference's "co-locate everything
+  * in one database file with join-key indexes" (reference:
+  * src/main.rs:194-206); ScaleUtilsSpec pins that plan. This object
+  * holds the layouts Spark does not build itself: Z-order clustering
+  * on two filter columns.
   */
 object Bucketing {
-
-  /** Write `df` as a bucketed+sorted managed table (parquet). */
-  def writeBucketed(df: DataFrame, table: String, key: String,
-                    numBuckets: Int, sortCols: Seq[String] = Nil): Unit = {
-    val w = df.write.mode("overwrite").format("parquet")
-      .bucketBy(numBuckets, key)
-    (if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w)
-      .saveAsTable(table)
-  }
-
-  /** Join two same-bucketed tables on their bucket key — planner elides
-    * both shuffles (verify with explain: no Exchange below the join). */
-  def bucketedJoin(spark: SparkSession, leftTable: String, rightTable: String,
-                   key: String): DataFrame =
-    spark.table(leftTable).join(spark.table(rightTable), key)
 
   /** Z-order-clustered parquet write: range-partition + sort by the
     * Morton interleave of two filter columns, so every output file's

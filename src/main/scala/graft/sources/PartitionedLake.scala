@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Scratch
+
 /** Month-partitioned parquet lake layout — the ingest organization for
   * the 100 TB fact table.
   *
@@ -24,16 +26,9 @@ object PartitionedLake {
     * previous mode after (static mode — the default — would drop every
     * partition not present in the written frame: the classic silent
     * data-loss trap). */
-  private def withDynamicOverwrite[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  private def withDynamicOverwrite[T](spark: SparkSession)(body: => T): T =
+    Scratch.withConf(spark,
+      "spark.sql.sources.partitionOverwriteMode" -> "dynamic")(body)
 
   /** Streaming-ingest upsert: write one micro-batch partitioned by
     * (month, ingest_batch). Dynamic overwrite replaces ONLY the

@@ -249,9 +249,12 @@ object SqliteFile {
   }
 
   /** Build a table b-tree from (rowid, record) pairs; returns root page.
-    * If `rootAtPage1`, the root lands on page 1 (sqlite_master). Every
-    * step indexes into `rows` and the levels built from it, hence
-    * IndexedSeq: on a List each lookup walks the list. */
+    * If `rootAtPage1`, the root is built on page 1 (sqlite_master), after
+    * the 100-byte file header: every level of that tree is packed to
+    * page 1's smaller budget, so the level that fits one page fits page
+    * 1 and no page is left unreferenced. Every step indexes into `rows`
+    * and the levels built from it, hence IndexedSeq: on a List each
+    * lookup walks the list. */
   private def buildTableBtree(db: Db, rows: IndexedSeq[(Long, Array[Byte])],
                               rootAtPage1: Boolean = false): Int = {
     val leafCells = rows.map { case (rowid, rec) =>
@@ -261,23 +264,17 @@ object SqliteFile {
         splitPayload(db, rec, MaxLocal)
     }
     val rowidOf = rows.map(_._1)
+    val headerAt = if (rootAtPage1) 100 else 0
 
-    // single-leaf fast path (covers sqlite_master for few tables)
-    val page1Usable = PageSize - 100
-    if (rootAtPage1 &&
-        8 + leafCells.map(_.length + 2).sum <= page1Usable) {
-      db.put(1, buildPage(0x0D, leafCells, 0, 100))
-      return 1
-    }
-
-    // empty table: a single cell-less leaf page is its whole b-tree
-    if (leafCells.isEmpty) {
-      if (rootAtPage1) { db.put(1, buildPage(0x0D, Nil, 0, 100)); return 1 }
-      val no = db.alloc(); db.put(no, buildPage(0x0D, Nil, 0, 0)); return no
+    // single-leaf tree, empty or not (covers sqlite_master for few tables)
+    if (8 + leafCells.map(_.length + 2).sum <= PageSize - headerAt) {
+      val no = if (rootAtPage1) 1 else db.alloc()
+      db.put(no, buildPage(0x0D, leafCells, 0, headerAt))
+      return no
     }
 
     // leaves
-    val leafGroups = packPages(leafCells, 8, PageSize)
+    val leafGroups = packPages(leafCells, 8, PageSize - headerAt)
     var idx = 0
     var level: IndexedSeq[(Int, Long)] = leafGroups.map { g =>
       val no = db.alloc()
@@ -292,7 +289,7 @@ object SqliteFile {
       // ~7 bytes each → one level fans out ~500×, so depth stays log
       val next = ArrayBuffer[(Int, Long)]()
       var i = 0
-      val maxKids = (PageSize - 12 - 4) / (2 + 4 + 9) // conservative
+      val maxKids = (PageSize - headerAt - 12 - 4) / (2 + 4 + 9) // conservative
       while (i < level.length) {
         var take = math.min(maxKids, level.length - i)
         // never leave a lone child for the final group: a 1-child
@@ -303,54 +300,15 @@ object SqliteFile {
         i += take
         val cells = group.init.map { case (child, maxRowid) =>
           u32(child) ++ varint(maxRowid) }
-        val no = db.alloc()
-        db.put(no, buildPage(0x05, cells, group.last._1, 0))
+        // the whole level under one page: that page is the root
+        val root = rootAtPage1 && take == level.length
+        val no = if (root) 1 else db.alloc()
+        db.put(no, buildPage(0x05, cells, group.last._1, if (root) 100 else 0))
         next += ((no, group.last._2))
       }
       level = next.toIndexedSeq
     }
-
-    val (rootNo, _) = level.head
-    if (rootAtPage1) {
-      // copy the root's structure onto page 1 (rebuild with 100-byte
-      // header offset); free page is left allocated but unreferenced
-      // only when the tree was deeper than one page — rebuild instead
-      val rebuilt = rebuildAtPage1(db, rootNo)
-      rebuilt
-    } else rootNo
-  }
-
-  /** Rebuild a root page's content at page 1 (100-byte header offset).
-    * Only needed for a multi-page sqlite_master. */
-  private def rebuildAtPage1(db: Db, rootNo: Int): Int = {
-    val src = db.pages(rootNo - 1)
-    val pageType = src(0) & 0xff
-    val nCells = ((src(3) & 0xff) << 8) | (src(4) & 0xff)
-    val headerLen = if (pageType == 0x05) 12 else 8
-    val cells = (0 until nCells).map { i =>
-      val ptr = ((src(headerLen + 2 * i) & 0xff) << 8) |
-        (src(headerLen + 2 * i + 1) & 0xff)
-      // cell length = parse enough to know: for interior, 4 + varint;
-      // for leaf, varints + payload
-      if (pageType == 0x05) {
-        val (_, n) = readVarint(src, ptr + 4)
-        java.util.Arrays.copyOfRange(src, ptr, ptr + 4 + n)
-      } else {
-        val (plen, n1) = readVarint(src, ptr)
-        val (_, n2) = readVarint(src, ptr + n1)
-        // on-page image may be shorter than the payload (overflow)
-        java.util.Arrays.copyOfRange(src, ptr,
-          ptr + n1 + n2 + imageLen(plen.toInt, MaxLocal))
-      }
-    }
-    val right = if (pageType == 0x05)
-      ((src(8) & 0xff) << 24) | ((src(9) & 0xff) << 16) |
-        ((src(10) & 0xff) << 8) | (src(11) & 0xff)
-    else 0
-    require(100 + headerLen + cells.map(_.length + 2).sum <= PageSize,
-      "sqlite_master root does not fit page 1")
-    db.put(1, buildPage(pageType, cells, right, 100))
-    1
+    level.head._1
   }
 
   // ---- index b-trees ---------------------------------------------------

@@ -11,7 +11,9 @@ import scala.jdk.CollectionConverters._
 import org.apache.commons.compress.archivers.zip.{ZipArchiveEntry,
   ZipArchiveOutputStream}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
+
+import graft.operators.Cleaning
 
 /** Artifact sink with SQLite parity (SURVEY.md §2.1 S6–S10).
   *
@@ -22,7 +24,7 @@ import org.apache.spark.sql.functions._
   * public file format by [[SqliteFile]]: three table b-trees and the
   * reference's nine indexes as native index b-trees, with the
   * reference's DDL (minus `IF NOT EXISTS`, as SQLite itself stores it)
-  * in `sqlite_master`. The writer holds one whole table plus one
+  * in `sqlite_master`, all as declared once in [[schema]]. The writer holds one whole table plus one
   * index's sorted entries on the driver at a time, so driver memory
   * grows with the largest table — single-writer by design, like the
   * reference: this is the *served* artifact, small relative to the
@@ -50,42 +52,46 @@ import org.apache.spark.sql.functions._
   */
 object SqlitePacker {
 
-  /** The reference's nine indexes (main.rs:192-207), as native index
-    * b-trees in the .db artifact. keyCols are positions in the table's
-    * column order. */
-  private val indexDefs: Map[String, Seq[SqliteFile.IndexDef]] = Map(
-    "prices" -> Seq(
-      SqliteFile.IndexDef("idx_prices_premise_code",
-        "CREATE INDEX idx_prices_premise_code ON prices (premise_code)", Seq(1)),
-      SqliteFile.IndexDef("idx_prices_item_code",
-        "CREATE INDEX idx_prices_item_code ON prices (item_code)", Seq(2))),
-    "premises" -> Seq(
-      SqliteFile.IndexDef("idx_premises_premise_code",
-        "CREATE UNIQUE INDEX idx_premises_premise_code ON premises (premise_code)", Seq(0)),
-      SqliteFile.IndexDef("idx_premises_premise_type",
-        "CREATE INDEX idx_premises_premise_type ON premises (premise_type)", Seq(3)),
-      SqliteFile.IndexDef("idx_premises_state",
-        "CREATE INDEX idx_premises_state ON premises (state)", Seq(4)),
-      SqliteFile.IndexDef("idx_premises_district",
-        "CREATE INDEX idx_premises_district ON premises (district)", Seq(5))),
-    "items" -> Seq(
-      SqliteFile.IndexDef("idx_items_item_code",
-        "CREATE UNIQUE INDEX idx_items_item_code ON items (item_code)", Seq(0)),
-      SqliteFile.IndexDef("idx_items_item_group",
-        "CREATE INDEX idx_items_item_group ON items (item_group)", Seq(3)),
-      SqliteFile.IndexDef("idx_items_item_category",
-        "CREATE INDEX idx_items_item_category ON items (item_category)", Seq(4))))
+  /** One table of the artifact: its name, its CREATE TABLE as
+    * `sqlite_master` stores it, and its indexes. */
+  final case class StoredTable(name: String, createSql: String,
+                               indexes: Seq[SqliteFile.IndexDef])
 
-  /** Per-table CREATE statements stored in sqlite_master. */
-  private val createTableSql = Map(
-    "prices" -> ("CREATE TABLE prices (date VARCHAR(255), premise_code " +
-      "INTEGER, item_code INTEGER, price FLOAT)"),
-    "premises" -> ("CREATE TABLE premises (premise_code INTEGER, premise " +
-      "VARCHAR(255), address VARCHAR(255), premise_type VARCHAR(255), " +
-      "state VARCHAR(255), district VARCHAR(255))"),
-    "items" -> ("CREATE TABLE items (item_code INTEGER, item VARCHAR(255), " +
-      "unit VARCHAR(255), item_group VARCHAR(255), item_category " +
-      "VARCHAR(255))"))
+  /** The reference's star schema (main.rs:192-207) in the order [[pack]]
+    * writes the tables: three tables and nine indexes, stored as native
+    * b-trees. The DDL is the reference's minus `IF NOT EXISTS`, as
+    * SQLite itself stores it; an index's key column is its position in
+    * the table's column order. */
+  val schema: Seq[StoredTable] = Seq(
+    StoredTable("prices",
+      "CREATE TABLE prices (date VARCHAR(255), premise_code INTEGER, " +
+        "item_code INTEGER, price FLOAT)",
+      Seq(SqliteFile.IndexDef("idx_prices_premise_code",
+          "CREATE INDEX idx_prices_premise_code ON prices (premise_code)", Seq(1)),
+        SqliteFile.IndexDef("idx_prices_item_code",
+          "CREATE INDEX idx_prices_item_code ON prices (item_code)", Seq(2)))),
+    StoredTable("premises",
+      "CREATE TABLE premises (premise_code INTEGER, premise VARCHAR(255), " +
+        "address VARCHAR(255), premise_type VARCHAR(255), " +
+        "state VARCHAR(255), district VARCHAR(255))",
+      Seq(SqliteFile.IndexDef("idx_premises_premise_code",
+          "CREATE UNIQUE INDEX idx_premises_premise_code ON premises (premise_code)", Seq(0)),
+        SqliteFile.IndexDef("idx_premises_premise_type",
+          "CREATE INDEX idx_premises_premise_type ON premises (premise_type)", Seq(3)),
+        SqliteFile.IndexDef("idx_premises_state",
+          "CREATE INDEX idx_premises_state ON premises (state)", Seq(4)),
+        SqliteFile.IndexDef("idx_premises_district",
+          "CREATE INDEX idx_premises_district ON premises (district)", Seq(5)))),
+    StoredTable("items",
+      "CREATE TABLE items (item_code INTEGER, item VARCHAR(255), " +
+        "unit VARCHAR(255), item_group VARCHAR(255), " +
+        "item_category VARCHAR(255))",
+      Seq(SqliteFile.IndexDef("idx_items_item_code",
+          "CREATE UNIQUE INDEX idx_items_item_code ON items (item_code)", Seq(0)),
+        SqliteFile.IndexDef("idx_items_item_group",
+          "CREATE INDEX idx_items_item_group ON items (item_group)", Seq(3)),
+        SqliteFile.IndexDef("idx_items_item_category",
+          "CREATE INDEX idx_items_item_category ON items (item_category)", Seq(4)))))
 
   /** Row → SQLite storage classes (INTEGER/REAL/TEXT/NULL). */
   private def sqlValues(r: org.apache.spark.sql.Row): Seq[Any] =
@@ -105,7 +111,7 @@ object SqlitePacker {
     df.schema.fields.foldLeft(df) { (d, f) =>
       f.dataType match {
         case org.apache.spark.sql.types.DateType =>
-          d.withColumn(f.name, date_format(col(f.name), "yyyy-MM-dd"))
+          d.withColumn(f.name, Cleaning.dateToString(col(f.name)))
         case _ => d
       }
     }
@@ -187,11 +193,10 @@ object SqlitePacker {
       priceRows += 1
       sqlValues(r)
     }
-    SqliteFile.write(dbPath, Seq("prices" -> priceStream,
-      "premises" -> dims.rows("premises"), "items" -> dims.rows("items"))
-      .map { case (name, rows) =>
-        SqliteFile.TableDef(name, createTableSql(name), rows, indexDefs(name))
-      })
+    SqliteFile.write(dbPath, schema.map { t =>
+      val rows = if (t.name == "prices") priceStream else dims.rows(t.name)
+      SqliteFile.TableDef(t.name, t.createSql, rows, t.indexes)
+    })
     println(s"Latest price rows: $priceRows")
 
     val zipPath = dir.resolve("pricecatcher.zip")

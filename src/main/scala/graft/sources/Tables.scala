@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.GraftFooterGlue
 
+import graft.Scratch
+
 /** Source layer: parquet scans over the driver test tables.
   *
   * All reads go through `spark.read.parquet`, i.e. Spark's vectorized
@@ -84,17 +86,8 @@ object Tables {
     // which .schema below forces (asserted by TablesSpec). The footer
     // schema is read inside the window too, so a TIMESTAMP(NANOS) `ts`
     // converts to a long, as inference under the conf converts it.
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "true")
-    try {
-      val raw = load(spark, d, "events")
-      normalizeTs(raw)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    Scratch.withConf(spark, "spark.sql.legacy.parquet.nanosAsLong" -> "true") {
+      normalizeTs(load(spark, d, "events"))
     }
   }
   /** Normalize an events frame's `ts` to session-zoned TimestampType,

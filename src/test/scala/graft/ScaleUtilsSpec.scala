@@ -8,7 +8,6 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 
 import graft.operators.Salt
-import graft.sources.Bucketing
 
 /** Scale utilities: bucketed joins plan without shuffles; salted
   * aggregation matches the plain aggregation; AQE splits a skewed
@@ -34,8 +33,10 @@ class ScaleUtilsSpec extends SparkSpec {
         rm(loc)
       }
     }
-    Bucketing.writeBucketed(li, "li_b", "l_orderkey", 4)
-    Bucketing.writeBucketed(o, "o_b", "l_orderkey", 4)
+    Seq(li -> "li_b", o -> "o_b").foreach { case (df, t) =>
+      df.write.mode("overwrite").format("parquet")
+        .bucketBy(4, "l_orderkey").saveAsTable(t)
+    }
 
     // force SMJ so the assertion is about bucketing, not broadcast; AQE
     // off so collect() actually traverses the join plan (AQE's wrapper
@@ -43,7 +44,7 @@ class ScaleUtilsSpec extends SparkSpec {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val joined = Bucketing.bucketedJoin(spark, "li_b", "o_b", "l_orderkey")
+      val joined = spark.table("li_b").join(spark.table("o_b"), "l_orderkey")
       val shuffles = joined.queryExecution.executedPlan.collect {
         case e: ShuffleExchangeExec => e
       }

@@ -35,6 +35,16 @@ class ScratchSpec extends SparkSpec {
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 
+  test("session confs are saved and restored in Scratch only") {
+    val all = Files.walk(mainSrc)
+    val callers = try all.iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(p => Files.readString(p).contains("conf.getOption("))
+      .map(p => mainSrc.relativize(p).toString).toSet
+    finally all.close()
+    assert(callers == Set("graft/Scratch.scala"), callers)
+  }
+
   test("state stores are unloaded from Scratch only") {
     val all = Files.walk(mainSrc)
     val callers = try all.iterator().asScala

@@ -472,4 +472,36 @@ class SqlitePackerSpec extends SparkSpec {
     }
     Files.delete(path)
   }
+
+  test("sqlite_master past page 1: 56 and 60 indexes leave no page unused") {
+    // at 56 indexes the master's rows fit a 4096-byte leaf but not page
+    // 1, whose first 100 bytes are the file header; at 60 they need an
+    // interior root. Either way the root must be built on page 1 itself.
+    val rows = (1 to 50).map(i => Seq(i.toLong, s"v$i"))
+    Seq(56, 60).foreach { n =>
+      val path = Files.createTempFile("graft_sqlite_master", ".db")
+      val indexes = (0 until n).map { i =>
+        val name = f"idx_wide_k_$i%02d"
+        SqliteFile.IndexDef(name, s"CREATE INDEX $name ON wide (k)", Seq(0))
+      }
+      SqliteFile.write(path, Seq(SqliteFile.TableDef("wide",
+        "CREATE TABLE wide (k INTEGER, v TEXT)", rows.iterator, indexes)))
+      val bytes = Files.readAllBytes(path)
+      assert(pageType(bytes, 1) == 0x05, s"n=$n: master root must be interior")
+      assert(SqliteFile.read(path, "sqlite_master").size == n + 1)
+      assert(SqliteFile.read(path, "wide") == rows)
+      indexes.foreach { ix =>
+        assert(SqliteFile.readIndex(path, ix.name) ==
+          rows.map(r => Seq(r(0), r(0))), ix.name)
+      }
+      if (hasSqlite3) {
+        val res = Process(Seq("sqlite3", path.toString,
+          "PRAGMA integrity_check;",
+          s"SELECT count(*) FROM wide INDEXED BY idx_wide_k_${n - 1} " +
+            "WHERE k >= 0;")).!!.trim
+        assert(res.linesIterator.toSeq == Seq("ok", "50"), s"n=$n: $res")
+      }
+      Files.delete(path)
+    }
+  }
 }
