@@ -1,9 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
+import graft.streaming.DocStreams
 
 /** Plan inspector for the st11 per-batch probe (which lives inside a
   * foreachBatch drive, so [[Explain]] can't reach it): prints the
@@ -36,19 +37,15 @@ object ExplainProbe {
     graft.operators.Curate.incremental(delta, corpus,
       "doc_id", "text", "source", 0.5).explain("formatted")
 
-    // the store-backed form: stage the probe index exactly as
-    // DocStreams.ingestBatch maintains it, then explain a batch's probe
-    def prep(df: DataFrame): DataFrame =
-      df.select(col("doc_id"), col("source").as("blk"),
-        sha2(col("text"), 256).as("h"),
-        sort_array(graft.functions.TextFunctions.tokenSet(col("text")))
-          .as("stoks"))
+    // the store-backed form: stage the probe index with the row builder
+    // DocStreams.ingestBatch maintains it with, then explain a probe
     val idx = Scratch.path("probe_index_explain", sfDir)
-    graft.sources.PartitionedLake.upsertBatchKeyed(prep(corpus), 0L, idx)
+    graft.sources.PartitionedLake.upsertBatchKeyed(
+      DocStreams.indexRows(corpus), 0L, idx)
     println("\n===== st11 per-batch probe, INDEXED form (r16: stored " +
-      "(doc_id, blk, h, stoks) rows only — no text in any ReadSchema) " +
-      "=====")
-    graft.operators.Curate.incrementalIndexed(prep(delta),
+      "(doc_id, blk, h, stoks) rows only — no text in any ReadSchema, h a " +
+      "32-byte binary digest) =====")
+    graft.operators.Curate.incrementalIndexed(DocStreams.indexRows(delta),
       spark.read.parquet(idx).select("doc_id", "blk", "h", "stoks"),
       0.5).explain("formatted")
     spark.stop()

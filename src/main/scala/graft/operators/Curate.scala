@@ -123,8 +123,8 @@ object Curate {
     * it). Per delta doc this emits
     *
     *   - `exact_dup`  — a corpus doc with identical text exists
-    *                    (grouped on sha2-256 so the probe shuffle
-    *                    carries 32-byte keys, not documents),
+    *                    (keyed on [[TextDedup.digest]] so the probe
+    *                    shuffle carries 32-byte keys, not documents),
     *   - `near_dup`   — some same-block corpus doc has token Jaccard >=
     *                    `threshold`, found via the cross-set lossless
     *                    prefix-filter join ([[TextDedup.tokenJaccardAgainst]])
@@ -139,8 +139,8 @@ object Curate {
                   textCol: String, blockCol: String,
                   threshold: Double = 0.5): DataFrame = {
     val dh = delta.select(col(idCol).as("doc_id"),
-      sha2(col(textCol), 256).as("h"))
-    val ch = corpus.select(sha2(col(textCol), 256).as("h")).distinct()
+      TextDedup.digest(col(textCol)).as("h"))
+    val ch = corpus.select(TextDedup.digest(col(textCol)).as("h")).distinct()
     val exactDup = dh.join(ch, Seq("h"), "left_semi")
       .select(col("doc_id")).distinct().withColumn("__exact", lit(true))
     val nearDup = TextDedup.tokenJaccardAgainst(delta, corpus,

@@ -69,14 +69,4 @@ object Dedup {
     pay.foldLeft(grouped)((d, c) => d.withColumn(c, col(s"__row.$c")))
       .drop("__row")
   }
-
-  /** Exact duplicate removal on a set of columns — hash-groupBy keeping
-    * the minimum of `keep` as the canonical representative. One shuffle
-    * on the dedup key; map-side combine makes it linear in distinct
-    * keys. For very wide text at 100 TB, dedup on a hash of the text
-    * (sha2) so shuffle rows stay small — collision risk 2^-128. */
-  def exact(df: DataFrame, on: Seq[String], keep: String): DataFrame =
-    df.groupBy(on.map(c => sha2(col(c).cast("string"), 256).as(s"__h_$c")): _*)
-      .agg(min(col(keep)).as(keep))
-      .select(keep)
 }

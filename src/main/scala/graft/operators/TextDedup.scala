@@ -22,11 +22,18 @@ import graft.plans.SortedIntersectFunctions.sortedIntersectCount
   */
 object TextDedup {
 
+  /** The exact-dedup key of a text: its SHA-256 digest as 32 raw bytes
+    * (`unhex(sha2(text, 256))`), half the size of the 64-char hex
+    * string `sha2` renders. Every exact probe and exact group-by keys
+    * on this one form — [[exact]], [[Curate.incremental]] and the
+    * stored `h` of [[graft.streaming.DocStreams]]' probe index. */
+  def digest(text: Column): Column = unhex(sha2(text, 256))
+
   /** Exact dedup: canonical representative (min id) + multiplicity per
-    * distinct text. Grouping key is sha2-256 of the raw text so the
-    * shuffle carries 32-byte keys instead of documents. */
+    * distinct text. Grouping key is the 32-byte [[digest]] of the raw
+    * text, so the shuffle carries 32-byte keys instead of documents. */
   def exact(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    docs.groupBy(sha2(col(textCol), 256).as("text_hash"))
+    docs.groupBy(digest(col(textCol)).as("text_hash"))
       .agg(min(col(idCol)).as("canonical_id"), count(lit(1)).as("n_copies"))
       .select("canonical_id", "n_copies")
 

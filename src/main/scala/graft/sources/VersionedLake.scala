@@ -5,6 +5,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import graft.streaming.Checkpoints
+
 /** Snapshot-versioned parquet lake: immutable data files + a per-version
   * manifest listing the files that ARE the table at that version — the
   * Delta/Iceberg commit-log shape reduced to its load-bearing core,
@@ -1362,39 +1364,46 @@ object VersionedLake {
     val spark = delta.sparkSession
     val v = fromVersion.getOrElse(latestVersion(spark, path))
     require(v > 0, "commitMerge needs an existing version to merge into")
-    // the Delta multiple-source-rows-matched rule: a duplicate key in
-    // the delta would silently double-insert (the anti-join removes
-    // ONE stored row, unionByName adds BOTH delta rows) — fail loudly
-    // instead. One delta-sized aggregate, head(1)-bounded.
-    val dup = delta.groupBy(keyCols.map(col): _*)
-      .agg(count(lit(1)).as("__n")).filter(col("__n") > 1).head(1)
-    require(dup.isEmpty,
-      s"commitMerge delta has multiple source rows for key " +
-        s"${keyCols.zip(dup.head.toSeq).map { case (k, x) => s"$k=$x" }
-          .mkString("(", ", ", ")")} — MERGE requires unique keys")
-    // partition-count-sized collect: the touched-partition list is
-    // planning metadata, the same scale as the manifest itself
-    val parts = delta.select(col(partCol).cast("string")).distinct()
-      .collect().map(_.getString(0)).toSeq
-    val livePartSet = manifestEntries(spark, path, v)
-      .filter(_.kind == KindData).map(_.part).toSet
-    val touched = parts.filter(livePartSet.contains)
-    val current =
-      if (touched.nonEmpty) readVersion(spark, path, v, touched)
-      else delta.drop(deleteCol.toSeq: _*).limit(0) // brand-new partition
-    val upserts = deleteCol.fold(delta)(dc =>
-      delta.filter(!coalesce(col(dc), lit(false))).drop(dc))
-    val merged = current
-      .join(delta.select(keyCols.map(col): _*), keyCols, "left_anti")
-      .unionByName(upserts, allowMissingColumns = evolveSchema)
-    // PIN the base this merge was computed against: a commit landing
-    // between the latestVersion read above and the manifest claim must
-    // trip the OCC conflict check (touched-partition overlap), not be
-    // silently overwritten by a merge built from stale partition
-    // contents (r11 verdict: the lost-update window)
-    doCommit(merged, partCol, path, None, Mode.Upsert, statsCol,
-      commitTs, pinnedBase = Some(v), forceReplaced = touched.toSet,
-      specIdFor = specIdFor)
+    // the source is read by the duplicate check, the partition list,
+    // the anti-join keys and the upserts: evaluate it ONCE (Delta's
+    // MERGE materializes its source the same way), so the duplicate
+    // check covers exactly the rows written; released after the commit.
+    // The shadowing `delta` keeps the raw source out of reach below.
+    Checkpoints.withLocal(delta) { delta =>
+      // the Delta multiple-source-rows-matched rule: a duplicate key in
+      // the delta would silently double-insert (the anti-join removes
+      // ONE stored row, unionByName adds BOTH delta rows) — fail loudly
+      // instead. One delta-sized aggregate, head(1)-bounded.
+      val dup = delta.groupBy(keyCols.map(col): _*)
+        .agg(count(lit(1)).as("__n")).filter(col("__n") > 1).head(1)
+      require(dup.isEmpty,
+        s"commitMerge delta has multiple source rows for key " +
+          s"${keyCols.zip(dup.head.toSeq).map { case (k, x) => s"$k=$x" }
+            .mkString("(", ", ", ")")} — MERGE requires unique keys")
+      // partition-count-sized collect: the touched-partition list is
+      // planning metadata, the same scale as the manifest itself
+      val parts = delta.select(col(partCol).cast("string")).distinct()
+        .collect().map(_.getString(0)).toSeq
+      val livePartSet = manifestEntries(spark, path, v)
+        .filter(_.kind == KindData).map(_.part).toSet
+      val touched = parts.filter(livePartSet.contains)
+      val current =
+        if (touched.nonEmpty) readVersion(spark, path, v, touched)
+        else delta.drop(deleteCol.toSeq: _*).limit(0) // brand-new partition
+      val upserts = deleteCol.fold(delta)(dc =>
+        delta.filter(!coalesce(col(dc), lit(false))).drop(dc))
+      val merged = current
+        .join(delta.select(keyCols.map(col): _*), keyCols, "left_anti")
+        .unionByName(upserts, allowMissingColumns = evolveSchema)
+      // PIN the base this merge was computed against: a commit landing
+      // between the latestVersion read above and the manifest claim must
+      // trip the OCC conflict check (touched-partition overlap), not be
+      // silently overwritten by a merge built from stale partition
+      // contents (r11 verdict: the lost-update window)
+      doCommit(merged, partCol, path, None, Mode.Upsert, statsCol,
+        commitTs, pinnedBase = Some(v), forceReplaced = touched.toSet,
+        specIdFor = specIdFor)
+    }
   }
 
   /** [[commitMerge]] executed THROUGH deletion vectors (Delta's
@@ -1464,44 +1473,49 @@ object VersionedLake {
     val spark = delta.sparkSession
     val v = fromVersion.getOrElse(latestVersion(spark, path))
     require(v > 0, "commitMergeDv needs an existing version to merge into")
-    // the Delta multiple-source-rows-matched rule (see commitMerge):
-    // a duplicate delta key would DV one stored row and append both
-    val dup = delta.groupBy(keyCols.map(col): _*)
-      .agg(count(lit(1)).as("__n")).filter(col("__n") > 1).head(1)
-    require(dup.isEmpty,
-      s"commitMergeDv delta has multiple source rows for key " +
-        s"${keyCols.zip(dup.headOption.map(_.toSeq).getOrElse(Seq.empty))
-          .map { case (k, x) => s"$k=$x" }
-          .mkString("(", ", ", ")")} — MERGE requires unique keys")
-    // partition-count-sized collect: planning metadata
-    val parts = delta.select(col(partCol).cast("string")).distinct()
-      .collect().map(_.getString(0)).toSeq
-    val all = manifestEntries(spark, path, v)
-    val livePartSet = all.filter(_.kind == KindData).map(_.part).toSet
-    val touched = parts.filter(livePartSet.contains).toSet
-    // DV rows: every currently-LIVE stored row whose key the delta
-    // carries (update or tombstone) — the mapped, already-DV-folded
-    // read guarantees dead rows are never re-marked, and the frame is
-    // changed-rows-sized
-    val dvDf =
-      if (touched.isEmpty) None
-      else {
-        val data = all.filter(e => e.kind == KindData && touched(e.part))
-        val dvs = all.filter(e => e.kind == KindDv && touched(e.part))
-        Some(mappedRead(spark, path, v, data, dvs, withMeta = true)
-          .join(delta.select(keyCols.map(col): _*), keyCols, "left_semi")
-          .select(col("__file"), col("__pos"), col(partCol)))
-      }
-    val upserts0 = deleteCol.fold(delta)(dc =>
-      delta.filter(!coalesce(col(dc), lit(false))).drop(dc))
-    val tbl = readVersion(spark, path, v).schema.fieldNames.toSeq
-    require(upserts0.columns.toSet == tbl.toSet,
-      s"commitMergeDv delta columns ${upserts0.columns.sorted.mkString(",")} " +
-        s"must equal table columns ${tbl.sorted.mkString(",")} — " +
-        "schema evolution takes commitMerge(evolveSchema = true)")
-    doCommit(upserts0.select(tbl.map(col): _*), partCol, path, txn,
-      Mode.MergeDv, statsCol, commitTs, pinnedBase = Some(v),
-      forceReplaced = touched, dvDf = dvDf, specIdFor = specIdFor)
+    // the source, evaluated ONCE and released after the commit (see
+    // commitMerge)
+    Checkpoints.withLocal(delta) { delta =>
+      // the Delta multiple-source-rows-matched rule (see commitMerge):
+      // a duplicate delta key would DV one stored row and append both
+      val dup = delta.groupBy(keyCols.map(col): _*)
+        .agg(count(lit(1)).as("__n")).filter(col("__n") > 1).head(1)
+      require(dup.isEmpty,
+        s"commitMergeDv delta has multiple source rows for key " +
+          s"${keyCols.zip(dup.headOption.map(_.toSeq).getOrElse(Seq.empty))
+            .map { case (k, x) => s"$k=$x" }
+            .mkString("(", ", ", ")")} — MERGE requires unique keys")
+      // partition-count-sized collect: planning metadata
+      val parts = delta.select(col(partCol).cast("string")).distinct()
+        .collect().map(_.getString(0)).toSeq
+      val all = manifestEntries(spark, path, v)
+      val livePartSet = all.filter(_.kind == KindData).map(_.part).toSet
+      val touched = parts.filter(livePartSet.contains).toSet
+      // DV rows: every currently-LIVE stored row whose key the delta
+      // carries (update or tombstone) — the mapped, already-DV-folded
+      // read guarantees dead rows are never re-marked, and the frame is
+      // changed-rows-sized
+      val dvDf =
+        if (touched.isEmpty) None
+        else {
+          val data = all.filter(e => e.kind == KindData && touched(e.part))
+          val dvs = all.filter(e => e.kind == KindDv && touched(e.part))
+          Some(mappedRead(spark, path, v, data, dvs, withMeta = true)
+            .join(delta.select(keyCols.map(col): _*), keyCols, "left_semi")
+            .select(col("__file"), col("__pos"), col(partCol)))
+        }
+      val upserts0 = deleteCol.fold(delta)(dc =>
+        delta.filter(!coalesce(col(dc), lit(false))).drop(dc))
+      val tbl = readVersion(spark, path, v).schema.fieldNames.toSeq
+      require(upserts0.columns.toSet == tbl.toSet,
+        s"commitMergeDv delta columns " +
+          s"${upserts0.columns.sorted.mkString(",")} " +
+          s"must equal table columns ${tbl.sorted.mkString(",")} — " +
+          "schema evolution takes commitMerge(evolveSchema = true)")
+      doCommit(upserts0.select(tbl.map(col): _*), partCol, path, txn,
+        Mode.MergeDv, statsCol, commitTs, pinnedBase = Some(v),
+        forceReplaced = touched, dvDf = dvDf, specIdFor = specIdFor)
+    }
   }
 
   /** A file's lake-relative path recovered from

@@ -14,7 +14,9 @@ import org.apache.spark.sql.execution.LogicalRDD
   * extended the discipline to the streaming sinks). The release is
   * PRECISE: it unpersists exactly the checkpoint's own RDD (the
   * [[LogicalRDD]] the checkpoint returns), never a global sweep that
-  * could hit a concurrent stream's live blocks.
+  * could hit a concurrent stream's live blocks. The lake's MERGE
+  * ([[graft.sources.VersionedLake.commitMerge]]) uses the same scope to
+  * evaluate its source once.
   *
   * localCheckpoint rather than persist on purpose: a persisted frame
   * recomputes on block loss, and a recompute DURING the overwrite

@@ -244,6 +244,36 @@ class LakeSpec extends SparkSpec {
       .select($"id").as[Long].collect().toSet == Set(1L, 2L, 3L, 9L, 7L))
   }
 
+  test("versioned lake: MERGE evaluates its source once (rewrite and " +
+      "deletion-vector forms)") {
+    import graft.sources.VersionedLake
+    // every evaluation of the source runs this filter once per row
+    val evals = spark.sparkContext.longAccumulator("merge_source_rows")
+    val seen = udf { (_: Long) => evals.add(1L); true }.asNondeterministic()
+    // update id 1, insert id 9 (part a), update id 3 (part b); the
+    // repartition keeps the filter a task-side stage
+    def source = Seq((1L, "a", 100.0), (9L, "a", 900.0), (3L, "b", 300.0))
+      .toDF("id", "part", "x").repartition(2).filter(seen($"id"))
+    val merges = Seq[String => Int](
+      VersionedLake.commitMerge(source, Seq("id"), "part", _),
+      VersionedLake.commitMergeDv(source, Seq("id"), "part", _))
+    for ((merge, i) <- merges.zipWithIndex) {
+      val lake = java.nio.file.Files.createTempDirectory("lake_mrg1").toString
+      VersionedLake.reset(spark, lake)
+      VersionedLake.commitOverwrite(
+        Seq((1L, "a", 1.0), (2L, "a", 2.0), (3L, "b", 3.0))
+          .toDF("id", "part", "x"),
+        "part", lake)
+      evals.reset()
+      assert(merge(lake) == 2)
+      assert(evals.value == 3L,
+        s"merge form $i evaluated its 3-row source ${evals.value / 3.0} times")
+      assert(VersionedLake.readLatest(spark, lake)
+        .select($"id", $"x").as[(Long, Double)].collect().toMap ==
+        Map(1L -> 100.0, 2L -> 2.0, 3L -> 300.0, 9L -> 900.0))
+    }
+  }
+
   test("versioned lake: partition values needing Hive path-escaping " +
       "round-trip through merge, parts filters, and the manifest") {
     import graft.sources.VersionedLake

@@ -486,6 +486,103 @@ class StreamingSpec extends SparkSpec {
       Seq(1L, 2L, 5L))
   }
 
+  test("probe index v2: the stored h is the 32-byte binary digest " +
+      "unhex(sha2(text, 256)), and each partition carries the marker") {
+    import graft.model.Rows.Document
+    import org.apache.spark.sql.types.BinaryType
+    def doc(id: Long, text: String) =
+      Document(id, text, "en", "web", text.length.toLong)
+    val corpus = java.nio.file.Files
+      .createTempDirectory("stream_dedup_v2").toString
+    val docs = Seq(doc(1, "alpha beta gamma delta epsilon"),
+      doc(2, "one two three four five six")).toDS().toDF()
+    graft.streaming.DocStreams.ingestBatch(docs, 0L, corpus)
+    val idx = spark.read.parquet(s"$corpus/_probe_index")
+    assert(idx.schema("h").dataType == BinaryType)
+    val rows = idx.join(docs, Seq("doc_id"))
+      .select(length($"h"), $"h" === unhex(sha2($"text", 256)))
+      .as[(Int, Boolean)].collect()
+    assert(rows.toSeq == Seq((32, true), (32, true)))
+    assert(new java.io.File(s"$corpus/_probe_index/ingest_batch=0/" +
+      graft.streaming.DocStreams.IndexMarker).isFile)
+  }
+
+  test("probe index v2: a torn index partition (crash between the " +
+      "corpus write and the index write) has no marker and heals") {
+    import graft.model.Rows.Document
+    def doc(id: Long, text: String) =
+      Document(id, text, "en", "web", text.length.toLong)
+    val corpus = java.nio.file.Files
+      .createTempDirectory("stream_dedup_torn").toString
+    val idxPath = s"$corpus/_probe_index"
+    graft.streaming.DocStreams.ingestBatch(
+      Seq(doc(1, "alpha beta gamma delta epsilon")).toDS().toDF(), 0L,
+      corpus)
+    graft.streaming.DocStreams.ingestBatch(
+      Seq(doc(2, "one two three four five six"),
+        doc(3, "totally novel content here now")).toDS().toDF(), 1L, corpus)
+    // the crash: batch 1's index partition holds doc 2's row only, and
+    // no marker (the rewrite replaces the partition directory whole)
+    val survivor = spark.read.parquet(s"$idxPath/ingest_batch=1")
+      .filter($"doc_id" === 2L)
+    graft.sources.PartitionedLake.upsertBatchKeyed(
+      spark.createDataFrame(survivor.collectAsList(), survivor.schema),
+      1L, idxPath)
+    assert(spark.read.parquet(s"$idxPath/ingest_batch=1").count() == 1)
+    // batch 2 repeats doc 3, whose index row was lost: it must drop
+    graft.streaming.DocStreams.ingestBatch(
+      Seq(doc(4, "totally novel content here now"),
+        doc(5, "a brand new text nobody wrote")).toDS().toDF(), 2L, corpus)
+    val store = spark.read.parquet(corpus)
+    assert(store.select($"doc_id").as[Long].collect().sorted.toSeq ==
+      Seq(1L, 2L, 3L, 5L), "the repeat of doc 3 escaped the probe")
+    assert(spark.read.parquet(s"$idxPath/ingest_batch=1")
+      .select($"doc_id").as[Long].collect().sorted.toSeq == Seq(2L, 3L),
+      "the heal writes the torn partition back whole")
+  }
+
+  test("probe index v2: a pre-v2 store (hex h, no markers) heals once " +
+      "and is read back from the index afterwards") {
+    import graft.model.Rows.Document
+    import org.apache.spark.sql.types.BinaryType
+    def doc(id: Long, text: String) =
+      Document(id, text, "en", "web", text.length.toLong)
+    val root = java.nio.file.Files.createTempDirectory("stream_dedup_v1")
+    val corpus = root.resolve("corpus").toString
+    val idxPath = s"$corpus/_probe_index"
+    // batch 0 as the v1 ingest left it: corpus partition plus an index
+    // partition with the 64-char hex digest and no marker
+    val batch0 = Seq(doc(1, "alpha beta gamma delta epsilon"),
+      doc(2, "one two three four five six")).toDS().toDF()
+    graft.sources.PartitionedLake.upsertBatchKeyed(batch0, 0L, corpus)
+    graft.sources.PartitionedLake.upsertBatchKeyed(batch0.select($"doc_id",
+      $"source".as("blk"), sha2($"text", 256).as("h"),
+      sort_array(graft.functions.TextFunctions.tokenSet($"text"))
+        .as("stoks")), 0L, idxPath)
+    val marker = new java.io.File(s"$idxPath/ingest_batch=0/" +
+      graft.streaming.DocStreams.IndexMarker)
+    assert(!marker.exists())
+    // batch 1 heals partition 0 and writes it back in v2 form
+    graft.streaming.DocStreams.ingestBatch(
+      Seq(doc(3, "alpha beta gamma delta epsilon"),
+        doc(4, "totally novel content here now")).toDS().toDF(), 1L, corpus)
+    assert(marker.isFile, "the healed partition carries the marker")
+    val healed = spark.read.parquet(s"$idxPath/ingest_batch=0")
+    assert(healed.schema("h").dataType == BinaryType)
+    assert(healed.select($"doc_id").as[Long].collect().sorted.toSeq ==
+      Seq(1L, 2L))
+    // move batch 0's corpus partition away: a second heal could not
+    // find its text, so a dropped repeat proves batch 2 read the index
+    java.nio.file.Files.move(
+      java.nio.file.Paths.get(corpus, "ingest_batch=0"),
+      root.resolve("ingest_batch=0"))
+    graft.streaming.DocStreams.ingestBatch(
+      Seq(doc(5, "one two three four five six"),
+        doc(6, "a brand new text nobody wrote")).toDS().toDF(), 2L, corpus)
+    assert(spark.read.parquet(corpus).select($"doc_id").as[Long]
+      .collect().sorted.toSeq == Seq(4L, 6L))
+  }
+
   test("incremental dedup ingest on a file: URI corpus path still " +
       "probes the earlier batches") {
     import graft.model.Rows.Document
