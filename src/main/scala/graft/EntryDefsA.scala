@@ -1327,7 +1327,7 @@ private[graft] object EntryDefsA {
     * set is BYTE-IDENTICAL to v1's (pointers, zero rows rewritten;
     * the witness l15 cannot produce), dv_sidecars_v2 that the delete
     * physically landed as sidecars. Readers anti-fold the positions
-    * ([[graft.sources.VersionedLake.foldDeletes]], broadcast-sized
+    * ([[graft.sources.VersionedLake.readVersion]], broadcast-sized
     * here); a reader pinned to v1 still sees the rows (LakeSpec).
     * Version 3 is OPTIMIZE materializing the fold and RETIRING the
     * sidecars (dv_retired_v3) — content provably unchanged: the v3
@@ -1898,15 +1898,9 @@ private[graft] object EntryDefsA {
     val keys = li.select(col("l_partkey")).distinct()
       .orderBy(col("l_partkey")).limit(5)
     val (toRead1, nIdx1, nSkip1) = BloomIndex.prunedRels(s, lake, 1, keys)
-    // the lookup IS prune + exact semi-join over the survivors —
-    // reuse the prune this lifecycle already ran for its witness
-    // booleans instead of re-running it inside BloomIndex.lookup
-    // (r16: two redundant sidecar-prune jobs removed per lifecycle;
-    // same file set, same semi-join, output identical)
-    def probeFiles(v: Int, toRead: Set[String]): DataFrame =
-      VersionedLake.readFiles(s, lake, v, toRead)
-        .join(broadcast(keys), Seq("l_partkey"), "left_semi")
-    val probe1 = probeFiles(1, toRead1)
+    // the lookup over the prune this lifecycle already ran for its
+    // witness booleans
+    val probe1 = BloomIndex.lookup(s, lake, keys, 1, toRead1)
     // incremental half: an append whose rows all carry the smallest
     // probed partkey (fresh files must join the lookup's result)
     val off = ttKeyOffset(li)
@@ -1921,7 +1915,7 @@ private[graft] object EntryDefsA {
     val freshOnly = indexed2.nonEmpty &&
       indexed2.toSet.intersect(indexed1.toSet).isEmpty
     val (toRead2, _, nSkip2) = BloomIndex.prunedRels(s, lake, 2, keys)
-    val probe2 = probeFiles(2, toRead2)
+    val probe2 = BloomIndex.lookup(s, lake, keys, 2, toRead2)
     def summarize(df: DataFrame, name: String): DataFrame =
       df.agg(count(lit(1)).as("n_rows"),
           round(sum(col("l_quantity")), 2).as("sum_qty"),

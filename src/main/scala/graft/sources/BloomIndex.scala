@@ -314,10 +314,17 @@ object BloomIndex {
     * skipped file would LOSE rows and fail any equality gate). */
   def lookup(spark: SparkSession, path: String, keys: DataFrame,
              version: Option[Int] = None): DataFrame = {
-    val c = cfg(spark, path)
     val v = version.getOrElse(VersionedLake.latestVersion(spark, path))
-    val cur = resolveCol(spark, path, v, c)
-    val (toRead, _, _) = prunedRels(spark, path, v, keys)
+    lookup(spark, path, keys, v, prunedRels(spark, path, v, keys)._1)
+  }
+
+  /** [[lookup]] over a file set the caller already pruned with
+    * [[prunedRels]] (a caller that also reports the prune's counts
+    * runs it once): the exact semi-join on the indexed column's
+    * current name at `v`, resolved by stable id. */
+  def lookup(spark: SparkSession, path: String, keys: DataFrame, v: Int,
+             toRead: Set[String]): DataFrame = {
+    val cur = resolveCol(spark, path, v, cfg(spark, path))
     VersionedLake.readFiles(spark, path, v, toRead)
       .join(broadcast(keys.select(col(cur)).distinct()),
         Seq(cur), "left_semi")

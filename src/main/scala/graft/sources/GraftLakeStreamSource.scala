@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.StructType
   * the pure cursor-range slice [[VersionedLake.appendsSlice]], which
   * makes checkpoint recovery exact by construction (manifests are
   * immutable and list files in sorted order — the offset-stability
-  * argument pollAppends documents).
+  * argument the append walk behind pollAppends documents).
   *
   * Contract, all inherited from the append feed and stated loudly:
   *  - The FIRST batch is the SNAPSHOT: getBatch(None, end) reads the

@@ -1360,49 +1360,62 @@ object VersionedLake {
                   commitTs: Option[Long] = None,
                   fromVersion: Option[Int] = None,
                   evolveSchema: Boolean = false,
-                  specIdFor: String => Option[Int] = _ => None): Int = {
-    val spark = delta.sparkSession
-    val v = fromVersion.getOrElse(latestVersion(spark, path))
-    require(v > 0, "commitMerge needs an existing version to merge into")
-    // the source is read by the duplicate check, the partition list,
-    // the anti-join keys and the upserts: evaluate it ONCE (Delta's
-    // MERGE materializes its source the same way), so the duplicate
-    // check covers exactly the rows written; released after the commit.
-    // The shadowing `delta` keeps the raw source out of reach below.
-    Checkpoints.withLocal(delta) { delta =>
-      // the Delta multiple-source-rows-matched rule: a duplicate key in
-      // the delta would silently double-insert (the anti-join removes
-      // ONE stored row, unionByName adds BOTH delta rows) — fail loudly
-      // instead. One delta-sized aggregate, head(1)-bounded.
-      val dup = delta.groupBy(keyCols.map(col): _*)
-        .agg(count(lit(1)).as("__n")).filter(col("__n") > 1).head(1)
-      require(dup.isEmpty,
-        s"commitMerge delta has multiple source rows for key " +
-          s"${keyCols.zip(dup.head.toSeq).map { case (k, x) => s"$k=$x" }
-            .mkString("(", ", ", ")")} — MERGE requires unique keys")
-      // partition-count-sized collect: the touched-partition list is
-      // planning metadata, the same scale as the manifest itself
-      val parts = delta.select(col(partCol).cast("string")).distinct()
-        .collect().map(_.getString(0)).toSeq
-      val livePartSet = manifestEntries(spark, path, v)
-        .filter(_.kind == KindData).map(_.part).toSet
-      val touched = parts.filter(livePartSet.contains)
-      val current =
-        if (touched.nonEmpty) readVersion(spark, path, v, touched)
-        else delta.drop(deleteCol.toSeq: _*).limit(0) // brand-new partition
+                  specIdFor: String => Option[Int] = _ => None): Int =
+    mergePrelude(delta, keyCols, partCol, path, fromVersion,
+      "commitMerge") { (delta, v, all, touched) =>
+      val current = readEntries(delta.sparkSession, path, v,
+          all.filter(e => touched(e.part)))
+        .getOrElse(delta.drop(deleteCol.toSeq: _*).limit(0)) // new parts
       val upserts = deleteCol.fold(delta)(dc =>
         delta.filter(!coalesce(col(dc), lit(false))).drop(dc))
       val merged = current
         .join(delta.select(keyCols.map(col): _*), keyCols, "left_anti")
         .unionByName(upserts, allowMissingColumns = evolveSchema)
       // PIN the base this merge was computed against: a commit landing
-      // between the latestVersion read above and the manifest claim must
-      // trip the OCC conflict check (touched-partition overlap), not be
+      // between the base resolve and the manifest claim must trip the
+      // OCC conflict check (touched-partition overlap), not be
       // silently overwritten by a merge built from stale partition
-      // contents (r11 verdict: the lost-update window)
+      // contents (the lost-update window)
       doCommit(merged, partCol, path, None, Mode.Upsert, statsCol,
-        commitTs, pinnedBase = Some(v), forceReplaced = touched.toSet,
+        commitTs, pinnedBase = Some(v), forceReplaced = touched,
         specIdFor = specIdFor)
+    }
+
+  /** The prelude both MERGE forms share. The source is read by the
+    * duplicate check, the partition list, the matched-key join and
+    * the upserts, so it is evaluated ONCE (Delta's MERGE materializes
+    * its source the same way) and released after `body` commits: the
+    * duplicate check covers exactly the rows written. A duplicate key
+    * refuses loudly, naming `verb` (the Delta
+    * multiple-source-rows-matched rule: the rewrite form would remove
+    * ONE stored row and insert BOTH delta rows, the DV form would
+    * mark one and append both). `body` gets the materialized source
+    * (shadowing the raw one), the base version, its entries, and the
+    * touched partitions: the delta's partitions that hold live data
+    * at the base. */
+  private def mergePrelude[A](delta: DataFrame, keyCols: Seq[String],
+                              partCol: String, path: String,
+                              fromVersion: Option[Int], verb: String)
+      (body: (DataFrame, Int, Seq[FileEntry], Set[String]) => A): A = {
+    val spark = delta.sparkSession
+    val v = fromVersion.getOrElse(latestVersion(spark, path))
+    require(v > 0, s"$verb needs an existing version to merge into")
+    Checkpoints.withLocal(delta) { delta =>
+      // one delta-sized aggregate, head(1)-bounded
+      val dup = delta.groupBy(keyCols.map(col): _*)
+        .agg(count(lit(1)).as("__n")).filter(col("__n") > 1).head(1)
+      require(dup.isEmpty,
+        s"$verb delta has multiple source rows for key " +
+          s"${keyCols.zip(dup.head.toSeq).map { case (k, x) => s"$k=$x" }
+            .mkString("(", ", ", ")")} — MERGE requires unique keys")
+      // partition-count-sized collect: the touched-partition list is
+      // planning metadata, the same scale as the manifest itself
+      val parts = delta.select(col(partCol).cast("string")).distinct()
+        .collect().map(_.getString(0)).toSet
+      val all = manifestEntries(spark, path, v)
+      val touched = all.iterator
+        .filter(e => e.kind == KindData && parts(e.part)).map(_.part).toSet
+      body(delta, v, all, touched)
     }
   }
 
@@ -1469,44 +1482,21 @@ object VersionedLake {
                           fromVersion: Option[Int],
                           txn: Option[Long],
                           specIdFor: String => Option[Int] = _ => None)
-      : Int = {
-    val spark = delta.sparkSession
-    val v = fromVersion.getOrElse(latestVersion(spark, path))
-    require(v > 0, "commitMergeDv needs an existing version to merge into")
-    // the source, evaluated ONCE and released after the commit (see
-    // commitMerge)
-    Checkpoints.withLocal(delta) { delta =>
-      // the Delta multiple-source-rows-matched rule (see commitMerge):
-      // a duplicate delta key would DV one stored row and append both
-      val dup = delta.groupBy(keyCols.map(col): _*)
-        .agg(count(lit(1)).as("__n")).filter(col("__n") > 1).head(1)
-      require(dup.isEmpty,
-        s"commitMergeDv delta has multiple source rows for key " +
-          s"${keyCols.zip(dup.headOption.map(_.toSeq).getOrElse(Seq.empty))
-            .map { case (k, x) => s"$k=$x" }
-            .mkString("(", ", ", ")")} — MERGE requires unique keys")
-      // partition-count-sized collect: planning metadata
-      val parts = delta.select(col(partCol).cast("string")).distinct()
-        .collect().map(_.getString(0)).toSeq
-      val all = manifestEntries(spark, path, v)
-      val livePartSet = all.filter(_.kind == KindData).map(_.part).toSet
-      val touched = parts.filter(livePartSet.contains).toSet
+      : Int =
+    mergePrelude(delta, keyCols, partCol, path, fromVersion,
+      "commitMergeDv") { (delta, v, all, touched) =>
       // DV rows: every currently-LIVE stored row whose key the delta
       // carries (update or tombstone) — the mapped, already-DV-folded
       // read guarantees dead rows are never re-marked, and the frame is
       // changed-rows-sized
-      val dvDf =
-        if (touched.isEmpty) None
-        else {
-          val data = all.filter(e => e.kind == KindData && touched(e.part))
-          val dvs = all.filter(e => e.kind == KindDv && touched(e.part))
-          Some(mappedRead(spark, path, v, data, dvs, withMeta = true)
-            .join(delta.select(keyCols.map(col): _*), keyCols, "left_semi")
-            .select(col("__file"), col("__pos"), col(partCol)))
-        }
+      val dvDf = readEntries(delta.sparkSession, path, v,
+          all.filter(e => touched(e.part)), withMeta = true)
+        .map(_.join(delta.select(keyCols.map(col): _*), keyCols, "left_semi")
+          .select(col("__file"), col("__pos"), col(partCol)))
       val upserts0 = deleteCol.fold(delta)(dc =>
         delta.filter(!coalesce(col(dc), lit(false))).drop(dc))
-      val tbl = readVersion(spark, path, v).schema.fieldNames.toSeq
+      val tbl = readVersion(delta.sparkSession, path, v)
+        .schema.fieldNames.toSeq
       require(upserts0.columns.toSet == tbl.toSet,
         s"commitMergeDv delta columns " +
           s"${upserts0.columns.sorted.mkString(",")} " +
@@ -1516,7 +1506,6 @@ object VersionedLake {
         Mode.MergeDv, statsCol, commitTs, pinnedBase = Some(v),
         forceReplaced = touched, dvDf = dvDf, specIdFor = specIdFor)
     }
-  }
 
   /** A file's lake-relative path recovered from
     * `_metadata.file_path` — the layout is fixed at
@@ -1524,7 +1513,7 @@ object VersionedLake {
     * prefix anchors the match to the LAST such suffix, so a lake
     * rooted under a directory that itself contains `/data/` cannot
     * mis-split. Both the DV writer ([[commitDelete]]) and the DV fold
-    * ([[foldDeletes]]) derive the reference through THIS expression,
+    * ([[readEntries]]) derive the reference through THIS expression,
     * so any URI escaping `_metadata.file_path` applies to a
     * Hive-escaped partition value is identical on both sides by
     * construction. */
@@ -1548,8 +1537,9 @@ object VersionedLake {
                                            rels: Set[String]): DataFrame = {
     val data = manifestEntries(spark, path, v)
       .filter(e => e.kind == KindData && rels.contains(e.rel))
-    require(data.nonEmpty, s"mappedFilesWithMeta: no such rels at $path@$v")
-    mappedRead(spark, path, v, data, Seq.empty, withMeta = true)
+    readEntries(spark, path, v, data, withMeta = true).getOrElse(
+      throw new IllegalArgumentException(
+        s"mappedFilesWithMeta: no such rels at $path@$v"))
   }
 
   /** Read a SUBSET of version `v`'s data files (by lake-relative
@@ -1558,14 +1548,34 @@ object VersionedLake {
     * primitive a secondary file-skipping index ([[BloomIndex]]) plans
     * into: the index decides WHICH files, this reads them correctly. */
   def readFiles(spark: SparkSession, path: String, v: Int,
-                rels: Set[String]): DataFrame = {
-    val all = manifestEntries(spark, path, v)
-    val data = all.filter(e => e.kind == KindData && rels.contains(e.rel))
-    val parts = data.map(_.part).toSet
-    val dvs = all.filter(e => e.kind == KindDv && parts.contains(e.part))
-    if (data.isEmpty) emptyOf(spark, path, v, all.filter(_.kind == KindData))
-    else mappedRead(spark, path, v, data, dvs)
+                rels: Set[String]): DataFrame =
+    readOrEmpty(spark, path, v, manifestEntries(spark, path, v)
+      .filter(e => e.kind == KindDv || rels.contains(e.rel)))
+
+  /** THE read path every versioned read goes through: `entries`' data
+    * files in manifest order, read by [[mappedRead]] with the
+    * deletion vectors among `entries` folded — only those whose
+    * partition holds a selected file (a DV marks positions in its own
+    * partition's files, so any other DV folds nothing). None when no
+    * data file is selected. `withMeta` keeps (__file, __pos) — the
+    * DV-computation read of the delete and DV-merge verbs. */
+  private def readEntries(spark: SparkSession, path: String, v: Int,
+                          entries: Seq[FileEntry],
+                          withMeta: Boolean = false): Option[DataFrame] = {
+    val data = entries.filter(_.kind == KindData)
+    if (data.isEmpty) None
+    else {
+      val parts = data.iterator.map(_.part).toSet
+      Some(mappedRead(spark, path, v, data,
+        entries.filter(e => e.kind == KindDv && parts(e.part)), withMeta))
+    }
   }
+
+  /** [[readEntries]] for the public reads: a selection of no data file
+    * reads as [[emptyOf]] version `v`. */
+  private def readOrEmpty(spark: SparkSession, path: String, v: Int,
+                          entries: Seq[FileEntry]): DataFrame =
+    readEntries(spark, path, v, entries).getOrElse(emptyOf(spark, path, v))
 
   /** THE versioned read core: `data` files of version `v` read under
     * the version's logical schema with COLUMN-MAPPING resolution and
@@ -1682,12 +1692,12 @@ object VersionedLake {
     * does), the commit records the doomed rows' PHYSICAL POSITIONS
     * (file, row index) in small DV sidecar parquet files and only
     * ADDS those to the manifest — every data file carries forward by
-    * pointer. Readers anti-fold the DVs ([[foldDeletes]]); a pinned
+    * pointer. Readers anti-fold the DVs ([[readEntries]]); a pinned
     * pre-delete reader is untouched (its manifest has no DV entry);
     * [[commitOptimize]] later materializes the fold and retires the
     * DVs, and [[vacuum]] reclaims them. At 100 TB churn this is the
     * difference between a 0.01% takedown writing DV-rows-sized bytes
-    * and rewriting 100% of its partitions' bytes (the r11 gap).
+    * and rewriting 100% of its partitions' bytes.
     *
     * Deletes are POSITIONAL, scoped to the files of `fromVersion`: a
     * key re-inserted by a LATER append lands in a new file and is
@@ -1713,25 +1723,23 @@ object VersionedLake {
     // partition-count-sized collect: planning metadata
     val parts = keys.select(col(partCol).cast("string")).distinct()
       .collect().map(_.getString(0)).toSet
-    val all = manifestEntries(spark, path, v)
-    val touched = all.filter(e => e.kind == KindData &&
-      parts.contains(e.part)).map(_.part).toSet
-    if (touched.isEmpty) return v
-    val data = all.filter(e => e.kind == KindData && touched(e.part))
-    val dvs = all.filter(e => e.kind == KindDv && touched(e.part))
+    val scoped = manifestEntries(spark, path, v)
+      .filter(e => parts.contains(e.part))
     // mapped + DV-folded read with (__file, __pos) kept: keyCols are
     // LOGICAL names, already-dead rows are never re-marked
-    val live = mappedRead(spark, path, v, data, dvs, withMeta = true)
-    val newDv = live
-      .join(keys.select(keyCols.map(col): _*), keyCols, "left_semi")
-      .select(col("__file"), col("__pos"), col(partCol))
-    doCommit(newDv, partCol, path, None, Mode.Delete, None, commitTs,
-      pinnedBase = Some(v), forceReplaced = touched)
+    readEntries(spark, path, v, scoped, withMeta = true).fold(v) { live =>
+      val newDv = live
+        .join(keys.select(keyCols.map(col): _*), keyCols, "left_semi")
+        .select(col("__file"), col("__pos"), col(partCol))
+      doCommit(newDv, partCol, path, None, Mode.Delete, None, commitTs,
+        pinnedBase = Some(v), forceReplaced =
+          scoped.iterator.filter(_.kind == KindData).map(_.part).toSet)
+    }
   }
 
   /** [[commitDelete]]'s PREDICATE form — `DELETE FROM t WHERE p`
     * reduced to the same DV commit (the one SQL row-level verb that IS
-    * a clean reduction, r14 verdict #5): rows of the pinned version
+    * a clean reduction): rows of the pinned version
     * matching `pred` get DV rows; data files carry forward by pointer;
     * a no-match delete mints nothing. `parts`, when given, is a
     * SUPERSET of the partitions that can hold matching rows (the
@@ -1749,28 +1757,26 @@ object VersionedLake {
     val all = manifestEntries(spark, path, v)
     val scoped = parts.fold(all)(ps =>
       all.filter(e => ps.contains(e.part)))
-    val data = scoped.filter(_.kind == KindData)
-    if (data.isEmpty) return v
-    val dvs = scoped.filter(_.kind == KindDv)
     // mapped + DV-folded read with (__file, __pos) kept: the predicate
     // sees LOGICAL columns, already-dead rows are never re-marked
-    val live = mappedRead(spark, path, v, data, dvs, withMeta = true)
-    // one scan shared by the touched-set probe and the commit write —
-    // persist (NOT localCheckpoint: checkpoint blocks outlive the
-    // call, releasable only by GC; a long session of streaming-
-    // takedown deletes would accumulate them) and release when done
-    val newDv = live.filter(pred)
-      .select(col("__file"), col("__pos"), col(partCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // partition-count-sized collect: planning metadata (which
-      // partitions actually hold doomed rows — only those re-mint)
-      val touched = newDv.select(col(partCol).cast("string")).distinct()
-        .collect().map(_.getString(0)).toSet
-      if (touched.isEmpty) return v
-      doCommit(newDv, partCol, path, None, Mode.Delete, None, commitTs,
-        pinnedBase = Some(v), forceReplaced = touched)
-    } finally newDv.unpersist()
+    readEntries(spark, path, v, scoped, withMeta = true).fold(v) { live =>
+      // one scan shared by the touched-set probe and the commit write —
+      // persist (NOT localCheckpoint: checkpoint blocks outlive the
+      // call, releasable only by GC; a long session of streaming-
+      // takedown deletes would accumulate them) and release when done
+      val newDv = live.filter(pred)
+        .select(col("__file"), col("__pos"), col(partCol))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        // partition-count-sized collect: planning metadata (which
+        // partitions actually hold doomed rows — only those re-mint)
+        val touched = newDv.select(col(partCol).cast("string")).distinct()
+          .collect().map(_.getString(0)).toSet
+        if (touched.isEmpty) v
+        else doCommit(newDv, partCol, path, None, Mode.Delete, None,
+          commitTs, pinnedBase = Some(v), forceReplaced = touched)
+      } finally newDv.unpersist()
+    }
   }
 
   /** OPTIMIZE: re-layout every partition of the LATEST version holding
@@ -1870,15 +1876,13 @@ object VersionedLake {
         case Seq(a) => Some(col(a))
         case Seq(a, b) => Some(graft.plans.ZOrder2.zorder2(col(a), col(b)))
       }
-      val merged = byPart.toSeq.sortBy(_._1).map { case (_, es) =>
-        val df = mappedRead(spark, path, v,
-          es.filter(_.kind == KindData), es.filter(_.kind == KindDv))
-        cluster match {
+      val merged = byPart.toSeq.sortBy(_._1).flatMap { case (_, es) =>
+        readEntries(spark, path, v, es).map(df => cluster match {
           case None => df.coalesce(1)
           case Some(ck) => df
             .repartitionByRange(targetFilesPerPart, ck)
             .sortWithinPartitions(ck)
-        }
+        })
       }.reduce(_.unionByName(_))
       // pinned for the same reason as commitMerge: the rewrite reads
       // version v's files, so a racing commit on a rewritten partition
@@ -1919,21 +1923,16 @@ object VersionedLake {
       .filter(p => a.get(p) != b.get(p))
     // row presence is tracked by an explicit per-side flag, never by
     // the VALUE column's nullness: a legitimately-NULL value must not
-    // masquerade as a missing row (r10 review — NULL->5 is a change,
-    // not an add; 5->NULL a change, not a removal). Each side reads
-    // its version's churned partitions DV-FOLDED (a side's dead rows
-    // are not rows on that side).
-    def readSide(v: Int, alias: String): Option[DataFrame] = {
-      val es = manifestEntries(spark, path, v)
-        .filter(e => churned.contains(e.part))
-      val data = es.filter(_.kind == KindData)
-      if (data.isEmpty) None
-      else Some(mappedRead(spark, path, v, data,
-          es.filter(_.kind == KindDv))
-        .select((keyCols.map(col) :+
+    // masquerade as a missing row (NULL->5 is a change, not an add;
+    // 5->NULL a change, not a removal). Each side reads its version's
+    // churned partitions DV-FOLDED (a side's dead rows are not rows
+    // on that side).
+    def readSide(v: Int, alias: String): Option[DataFrame] =
+      readEntries(spark, path, v, manifestEntries(spark, path, v)
+          .filter(e => churned.contains(e.part)))
+        .map(_.select((keyCols.map(col) :+
           col(valueCol).as(s"${valueCol}_$alias") :+
           lit(true).as(s"__in_$alias")): _*))
-    }
     val (bf, af) = (readSide(vFrom, "before"), readSide(vTo, "after"))
     def absent(df: DataFrame, alias: String): DataFrame = {
       val other = if (alias == "before") "after" else "before"
@@ -2167,15 +2166,16 @@ object VersionedLake {
 
   /** An empty frame with version `v`'s recorded schema — the shape a
     * prune that matches nothing resolves to (an out-of-range query's
-    * correct answer is zero rows, not an exception — r10 advice). For
-    * pre-schema manifests the schema bootstraps from any live file. */
-  private def emptyOf(spark: SparkSession, path: String, v: Int,
-                      entries: Seq[FileEntry]): DataFrame = {
+    * correct answer is zero rows, not an exception). For pre-schema
+    * manifests the schema bootstraps from any live data file. */
+  private def emptyOf(spark: SparkSession, path: String,
+                      v: Int): DataFrame = {
     val schema = readSchema(spark, path, v).getOrElse {
-      require(entries.nonEmpty,
+      val data = manifestEntries(spark, path, v).filter(_.kind == KindData)
+      require(data.nonEmpty,
         s"version $v records no schema and lists no files")
       spark.read
-        .parquet(s"${path.stripSuffix("/")}/${entries.head.rel}").schema
+        .parquet(resolve(path.stripSuffix("/"), data.head.rel)).schema
     }
     spark.createDataFrame(
       spark.sparkContext.emptyRDD[Row], schema)
@@ -2186,28 +2186,15 @@ object VersionedLake {
     * files reach the reader (an unmatched filter reads as EMPTY with
     * the version's schema, the zero-rows answer). */
   def readVersion(spark: SparkSession, path: String, v: Int,
-                  parts: Seq[String] = Seq.empty): DataFrame = {
+                  parts: Seq[String] = Seq.empty): DataFrame =
     // the parts filter pushes into manifestEntries: on a segmented
     // manifest, un-wanted partitions' segment files are never opened
     // (metadata-side pruning — at 10^6 files the file LIST is itself
-    // data-sized)
-    val all = manifestEntries(spark, path, v, parts.toSet)
-    val entries = all.filter(_.kind == KindData)
-    def want(e: FileEntry) = parts.isEmpty || parts.contains(e.part)
-    val wanted = entries.filter(want)
-    val dvs = all.filter(e => e.kind == KindDv && want(e))
-    if (wanted.isEmpty) emptyOf(spark, path, v, entries)
-    else
-      // read under the manifest's RECORDED schema: a version whose
-      // file list mixes pre- and post-evolution commits (carry-forward
-      // pointers) must surface the committed schema — a plain read
-      // takes one file's footer and silently DROPS columns the other
-      // files carry (parquet back-fills missing columns as NULL, the
-      // l04 semantics). Pre-schema manifests read footer-derived.
-      // Deletion vectors anti-fold and column mapping resolves on
-      // top ([[commitDelete]], [[mappedRead]]).
-      mappedRead(spark, path, v, wanted, dvs)
-  }
+    // data-sized). The read is under the manifest's RECORDED schema
+    // ([[mappedRead]]): a plain read of a file list mixing pre- and
+    // post-evolution commits would take one footer's schema and
+    // silently drop columns the other files carry.
+    readOrEmpty(spark, path, v, manifestEntries(spark, path, v, parts.toSet))
 
   /** Time-travel read of version `v` UNDER THE LATEST SCHEMA: columns
     * added by later commits surface as NULL (l04's mergeSchema
@@ -2248,32 +2235,23 @@ object VersionedLake {
     * prune, they never lie. A prune that empties the list returns an
     * EMPTY frame with the version's schema and matched=0 — an
     * out-of-range query's correct answer is zero rows, not an
-    * exception (r10 advice). The caller still applies the row-level
+    * exception. The caller still applies the row-level
     * predicate. Returns (reader, matchedFiles, totalFiles). */
   def readVersionRange(spark: SparkSession, path: String, v: Int,
                        qLo: Long, qHi: Long,
                        parts: Seq[String] = Seq.empty)
       : (DataFrame, Long, Long) = {
-    val all = manifestEntries(spark, path, v)
-      .filter(e => parts.isEmpty || parts.contains(e.part))
-    val entries = all.filter(_.kind == KindData)
-    val wanted = entries.filter(e => (e.lo, e.hi) match {
+    val all = manifestEntries(spark, path, v, parts.toSet)
+    val data = all.filter(_.kind == KindData)
+    val wanted = data.filter(e => (e.lo, e.hi) match {
       case (Some(l), Some(h)) => h >= qLo && l <= qHi
       case _ => true
     })
     // DVs of the surviving files' partitions still fold — a DV has no
     // zone (it references positions); rows for pruned files simply
     // never match. Matched/total counts stay DATA-file counts.
-    val dvs = all.filter(e => e.kind == KindDv &&
-      wanted.exists(_.part == e.part))
-    val reader =
-      if (wanted.isEmpty) emptyOf(spark, path, v, entries)
-      else
-        // recorded-schema read, same reason as readVersion: a pruned
-        // file list mixing pre- and post-evolution commits must not
-        // silently drop the evolved column to one footer's schema
-        mappedRead(spark, path, v, wanted, dvs)
-    (reader, wanted.size.toLong, entries.size.toLong)
+    (readOrEmpty(spark, path, v, wanted ++ all.filter(_.kind == KindDv)),
+      wanted.size.toLong, data.size.toLong)
   }
 
   /** Resolve a TIMESTAMP to a version: the last version whose `ts=`
@@ -2544,150 +2522,101 @@ object VersionedLake {
     * between the two versions: the versioned lake consumed AS A
     * STREAMING SOURCE (the Delta streaming-source shape: a reader
     * holds a version cursor, and each poll reads ONLY the new files —
-    * never a join, never the base). Loud when an intervening commit
-    * REPLACED or DROPPED a file (upsert/optimize/restore rewrote
-    * history): an append-only reader must fail rather than silently
-    * misread a rewrite, exactly Delta's
-    * `ignoreChanges`-unset behavior; the change-feed reader
+    * never a join, never the base). Loud when a commit inside the
+    * range REPLACED or DROPPED a file (upsert/optimize/restore
+    * rewrote history — even a file that was itself appended inside
+    * the range) or committed deletion vectors: an append-only reader
+    * must fail rather than silently misread a rewrite, exactly
+    * Delta's `ignoreChanges`-unset behavior; the change-feed reader
     * ([[changesBetween]]) is the API for that case. Returns an empty
     * typed frame when nothing was appended. */
   def appendsBetween(spark: SparkSession, path: String, vFrom: Int,
-                     vTo: Int): DataFrame = {
-    val from =
-      if (vFrom == 0) Set.empty[String]
-      else manifestEntries(spark, path, vFrom).map(_.rel).toSet
-    val toEntries = manifestEntries(spark, path, vTo)
-    val to = toEntries.map(_.rel).toSet
-    val removed = from -- to
-    require(removed.isEmpty,
-      s"versions ($vFrom, $vTo] are not append-only: ${removed.size} " +
-        "file(s) were replaced or dropped — read the change feed " +
-        "(changesBetween) instead")
-    val freshAll = toEntries.filterNot(e => from.contains(e.rel))
-    // a new DELETION VECTOR is a row removal wearing an added file:
-    // an append-only reader must refuse it exactly like a rewrite
-    val freshDvs = freshAll.count(_.kind == KindDv)
-    require(freshDvs == 0,
-      s"versions ($vFrom, $vTo] are not append-only: $freshDvs " +
-        "deletion-vector file(s) were committed (rows removed) — " +
-        "read the change feed (changesBetween) instead")
-    val fresh = freshAll
-    if (fresh.isEmpty)
-      emptyOf(spark, path, vTo, toEntries.filter(_.kind == KindData))
-    else
-      // mapped read: the fresh files may span a rename (id-resolved
-      // to vTo's logical names); no DVs by the append-only check
-      mappedRead(spark, path, vTo, fresh, Seq.empty)
-  }
+                     vTo: Int): DataFrame =
+    appendsSlice(spark, path, (vFrom, 0), (vTo, 0))
 
-  /** One version-step of the append-feed walk, shared by
-    * [[pollAppends]] / [[appendsSlice]] / [[advanceCursor]] so the
-    * append-only CONTRACT lives exactly once (r15 self-review: three
-    * verbatim validators would drift): a replaced/dropped file or a
-    * fresh deletion vector refuses loudly, pointing at the change
-    * feed. Returns (the version's FRESH entries in manifest order,
-    * its full rel set for the next step). */
-  private def freshAppends(prevRels: Set[String],
-                           nextEntries: Seq[FileEntry], next: Int,
-                           where: String)
-      : (Seq[FileEntry], Set[String]) = {
-    val nextRels = nextEntries.map(_.rel).toSet
-    val removed = prevRels -- nextRels
-    require(removed.isEmpty,
-      s"version $next is not append-only $where: ${removed.size} " +
-        "file(s) replaced or dropped — read the change feed " +
-        "(changesBetween) instead")
-    val fresh = nextEntries.filterNot(e => prevRels.contains(e.rel))
-    require(!fresh.exists(_.kind == KindDv),
-      s"version $next committed deletion vectors (rows removed) — " +
-        "read the change feed (changesBetween) instead")
-    (fresh, nextRels)
+  /** THE append-feed walk — the append-only contract's one
+    * definition, behind [[appendsBetween]], [[advanceCursor]],
+    * [[pollAppends]] and [[appendsSlice]]. Cursors are (v, p): every
+    * append of versions ≤ v, plus the first `p` fresh files of v+1 —
+    * manifests are immutable and list files in sorted order, so an
+    * offset is stable across polls and processes. The walk steps one
+    * manifest at a time from `from` toward the end cursor `to`,
+    * taking at most `maxFiles` fresh files. Each step refuses a
+    * replaced or dropped file and a fresh deletion vector (read the
+    * change feed instead), and a cursor offset past a version's
+    * fresh-file count (a foreign or torn offset) rather than
+    * misaligning. Metadata only. Returns the picked entries in
+    * manifest order, the cursor reached, and the last version
+    * stepped (`from`'s version when none). */
+  private def walkAppends(spark: SparkSession, path: String,
+                          from: (Int, Int), to: (Int, Int),
+                          maxFiles: Int = Int.MaxValue)
+      : (Seq[FileEntry], (Int, Int), Int) = {
+    require(maxFiles >= 1, "maxFiles must be >= 1")
+    val (fv, fOff) = from
+    val (tv, tOff) = to
+    val lastV = if (tOff > 0) tv + 1 else tv
+    var prevRels =
+      if (fv == 0) Set.empty[String]
+      else manifestEntries(spark, path, fv).map(_.rel).toSet
+    val picked = scala.collection.mutable.ArrayBuffer.empty[FileEntry]
+    var reached = from
+    var v = fv
+    while (picked.size < maxFiles && v < lastV) {
+      val next = v + 1
+      val entries = manifestEntries(spark, path, next)
+      val rels = entries.map(_.rel).toSet
+      val removed = prevRels -- rels
+      require(removed.isEmpty,
+        s"version $next is not append-only: ${removed.size} file(s) " +
+          "replaced or dropped — read the change feed (changesBetween) " +
+          "instead")
+      val fresh = entries.filterNot(e => prevRels.contains(e.rel))
+      val freshDvs = fresh.count(_.kind == KindDv)
+      require(freshDvs == 0,
+        s"version $next committed deletion vectors (rows removed: " +
+          s"$freshDvs deletion-vector file(s)) — read the change feed " +
+          "(changesBetween) instead")
+      val skip = if (next == fv + 1) fOff else 0
+      val until = if (next == tv + 1) tOff else fresh.size
+      require(skip <= until && until <= fresh.size,
+        s"cursor offset past version $next's ${fresh.size} fresh " +
+          s"file(s) (skip=$skip until=$until) — foreign or torn offset")
+      val take = math.min(maxFiles - picked.size, until - skip)
+      picked ++= fresh.slice(skip, skip + take)
+      reached = if (skip + take == fresh.size) (next, 0) else (v, skip + take)
+      prevRels = rels
+      v = next
+    }
+    (picked.toSeq, reached, v)
   }
 
   /** [[pollAppends]]'s cursor arithmetic WITHOUT the data read — the
-    * streaming source's OFFER path (r15 self-review: building and
-    * discarding a mappedRead frame per trigger made offers carry
-    * planning cost; and walking to the LIVE head let a rewrite
-    * committed after a Trigger.AvailableNow prepare crash a bounded
-    * drain that never reads it). Walks at most `maxFiles` appended
-    * files forward from `cursor`, never past `capVersion`; metadata
-    * only. */
+    * streaming source's OFFER path: offers carry no planning cost, and
+    * the walk stops at `capVersion`, so a rewrite committed after a
+    * Trigger.AvailableNow prepare never crashes a bounded drain that
+    * never reads it. */
   private[sources] def advanceCursor(spark: SparkSession, path: String,
                                      cursor: (Int, Int), maxFiles: Int,
-                                     capVersion: Int): (Int, Int) = {
-    require(maxFiles >= 1, "maxFiles must be >= 1")
-    val (cv, cOff) = cursor
-    var prevRels =
-      if (cv == 0) Set.empty[String]
-      else manifestEntries(spark, path, cv).map(_.rel).toSet
-    var n = 0
-    var full = cv
-    var part = cOff
-    var v = cv
-    while (n < maxFiles && v < capVersion) {
-      val next = v + 1
-      val (fresh, nextRels) = freshAppends(prevRels,
-        manifestEntries(spark, path, next), next, "past the cursor")
-      val skip = if (next == cv + 1) cOff else 0
-      val take = math.min(maxFiles - n, fresh.size - skip)
-      n += math.max(0, take)
-      if (skip + take == fresh.size) { full = next; part = 0 }
-      else part = skip + take
-      prevRels = nextRels
-      v = next
-    }
-    (full, part)
-  }
+                                     capVersion: Int): (Int, Int) =
+    walkAppends(spark, path, cursor, (capVersion, 0), maxFiles)._2
 
   /** ADMISSION-CONTROLLED streaming-source poll (Delta's
     * `maxFilesPerTrigger` on [[appendsBetween]]'s cursor — st24): a
     * burst of commits must not turn one micro-batch into an unbounded
     * read, so each poll consumes AT MOST `maxFiles` of the appended
-    * files past the cursor and records SUB-VERSION progress. The
-    * cursor is (fullVersion, partial): every append of versions ≤
-    * fullVersion consumed, plus the first `partial` fresh files of
-    * version fullVersion+1 — manifests are immutable and list files
-    * in sorted order, so the offset is stable across polls and
-    * processes. Same append-only contract as [[appendsBetween]]: a
-    * rewrite or a deletion-vector commit inside the traversed range
-    * fails loudly. Returns (batch, newCursor); a poll at the head
-    * returns an empty typed frame and the unchanged cursor. */
+    * files past the cursor and records SUB-VERSION progress in the
+    * cursor ([[walkAppends]]). Same append-only contract as
+    * [[appendsBetween]]. Returns (batch, newCursor); a poll at the
+    * head returns an empty typed frame and the unchanged cursor. */
   def pollAppends(spark: SparkSession, path: String,
                   cursor: (Int, Int),
                   maxFiles: Int): (DataFrame, (Int, Int)) = {
-    require(maxFiles >= 1, "maxFiles must be >= 1")
-    val (cv, cOff) = cursor
     val head = latestVersion(spark, path)
     require(head > 0, s"pollAppends on an empty lake at $path")
-    var prevRels =
-      if (cv == 0) Set.empty[String]
-      else manifestEntries(spark, path, cv).map(_.rel).toSet
-    val picked = scala.collection.mutable.ArrayBuffer.empty[FileEntry]
-    var full = cv
-    var part = cOff
-    var v = cv
-    var lastTraversed = cv
-    while (picked.size < maxFiles && v < head) {
-      val next = v + 1
-      val (fresh, nextRels) = freshAppends(prevRels,
-        manifestEntries(spark, path, next), next, "past the cursor")
-      val skip = if (next == cv + 1) cOff else 0
-      val take = math.min(maxFiles - picked.size, fresh.size - skip)
-      picked ++= fresh.slice(skip, skip + take)
-      if (skip + take == fresh.size) { full = next; part = 0 }
-      else part = skip + take
-      lastTraversed = next
-      prevRels = nextRels
-      v = next
-    }
-    val out =
-      if (picked.isEmpty)
-        emptyOf(spark, path, math.max(lastTraversed, 1),
-          manifestEntries(spark, path, math.max(lastTraversed, 1))
-            .filter(_.kind == KindData))
-      else
-        mappedRead(spark, path, lastTraversed, picked.toSeq, Seq.empty)
-    (out, (full, part))
+    val (picked, reached, last) =
+      walkAppends(spark, path, cursor, (head, 0), maxFiles)
+    (readOrEmpty(spark, path, math.max(last, 1), picked), reached)
   }
 
   /** The EXACT append slice between two [[pollAppends]] cursors —
@@ -2695,14 +2624,10 @@ object VersionedLake {
     * ([[GraftLakeStreamSource]]) replays from its write-ahead log:
     * a recovered micro-batch (start, end] must rebuild the SAME rows
     * whatever the head has advanced to, so the slice is a pure
-    * function of the two cursors (manifests are immutable and list
-    * files in sorted order — the [[pollAppends]] offset-stability
-    * argument). Cursor semantics as there: (v, p) = every append of
-    * versions ≤ v, plus the first `p` fresh files of v+1. Same
-    * append-only contract: a rewrite or deletion-vector commit inside
-    * the traversed range fails loudly (read [[changesBetween]]), and
-    * a cursor pointing past a version's fresh-file count (foreign
-    * offset, tampered WAL) refuses rather than misaligning. */
+    * function of the two cursors. Same append-only contract and
+    * offset check as every feed read ([[walkAppends]]); the rows read
+    * under the last traversed version's schema (fresh files may span
+    * a rename — id-resolved to its logical names). */
   def appendsSlice(spark: SparkSession, path: String,
                    from: (Int, Int), to: (Int, Int)): DataFrame = {
     val (fv, fOff) = from
@@ -2710,31 +2635,8 @@ object VersionedLake {
     require(fv >= 0 && fOff >= 0 && tOff >= 0 &&
         (fv < tv || (fv == tv && fOff <= tOff)),
       s"appendsSlice cursors out of order: $from .. $to")
-    val lastV = if (tOff > 0) tv + 1 else tv
-    var prevRels =
-      if (fv == 0) Set.empty[String]
-      else manifestEntries(spark, path, fv).map(_.rel).toSet
-    val picked = scala.collection.mutable.ArrayBuffer.empty[FileEntry]
-    var v = fv
-    while (v < lastV) {
-      val next = v + 1
-      val (fresh, nextRels) = freshAppends(prevRels,
-        manifestEntries(spark, path, next), next, "inside the slice")
-      val skip = if (next == fv + 1) fOff else 0
-      val until = if (next == tv + 1) tOff else fresh.size
-      require(skip <= fresh.size && until <= fresh.size && skip <= until,
-        s"cursor offset past version $next's ${fresh.size} fresh " +
-          s"file(s) (skip=$skip until=$until) — foreign or torn offset")
-      picked ++= fresh.slice(skip, until)
-      prevRels = nextRels
-      v = next
-    }
-    if (picked.isEmpty)
-      emptyOf(spark, path, math.max(lastV, 1),
-        manifestEntries(spark, path, math.max(lastV, 1))
-          .filter(_.kind == KindData))
-    else
-      mappedRead(spark, path, lastV, picked.toSeq, Seq.empty)
+    val (picked, _, last) = walkAppends(spark, path, from, to)
+    readOrEmpty(spark, path, math.max(last, 1), picked)
   }
 
   /** Forget the per-JVM txn replay-dedup cache for `path` — REQUIRED

@@ -832,6 +832,33 @@ class LakeSpec extends SparkSpec {
     }
   }
 
+  test("versioned lake: every append-feed read refuses a range in " +
+      "which a file was appended and then replaced") {
+    import graft.sources.VersionedLake
+    val lake = java.nio.file.Files.createTempDirectory("lake_app2").toString
+    VersionedLake.reset(spark, lake)
+    VersionedLake.commitAppend(
+      Seq((1L, "a", 1.0)).toDF("id", "part", "x"), "part", lake)
+    VersionedLake.commitAppend(
+      Seq((2L, "b", 2.0)).toDF("id", "part", "x"), "part", lake)
+    // v3 upserts part b: v2's file is replaced inside (1, 3]
+    VersionedLake.commitUpsert(
+      Seq((3L, "b", 3.0)).toDF("id", "part", "x"), "part", lake)
+    assert(VersionedLake.appendsBetween(spark, lake, 1, 2)
+      .select($"id").as[Long].collect().toSet == Set(2L))
+    val refusals = Seq(
+      "appendsBetween" -> (() =>
+        VersionedLake.appendsBetween(spark, lake, 1, 3)),
+      "pollAppends" -> (() =>
+        VersionedLake.pollAppends(spark, lake, (1, 0), 100)._1),
+      "appendsSlice" -> (() =>
+        VersionedLake.appendsSlice(spark, lake, (1, 0), (3, 0))))
+    for ((name, read) <- refusals) {
+      val ex = intercept[IllegalArgumentException](read())
+      assert(ex.getMessage.contains("not append-only"), s"$name: $ex")
+    }
+  }
+
   test("versioned lake OCC covers the MERGE and OPTIMIZE verbs: a " +
       "commit racing in on a touched partition aborts them, a " +
       "disjoint one rebases with no lost row") {
@@ -2008,6 +2035,33 @@ class LakeSpec extends SparkSpec {
     assert(BloomIndex.lookup(spark, lake, Seq(3L).toDF("id"),
       version = Some(1)).select($"id").as[Long].collect().toSet
       == Set(3L))
+  }
+
+  test("bloom index: the lookup over an already-pruned file set " +
+      "resolves a renamed column by stable id") {
+    import graft.sources.{BloomIndex, VersionedLake}
+    val lake = java.nio.file.Files.createTempDirectory("lake_bfp").toString
+    VersionedLake.reset(spark, lake)
+    VersionedLake.commitOverwrite(
+      (0L until 40L).map(i => (i, "p", i * 2.0)).toDF("id", "part", "x")
+        .repartitionByRange(2, $"id").sortWithinPartitions($"id"),
+      "part", lake)
+    BloomIndex.define(spark, lake, BloomIndex.Cfg("id", mBits = 4096))
+    BloomIndex.ensure(spark, lake, 1)
+    VersionedLake.commitRenameColumn(spark, lake, "id", "ident")
+    val v2 = VersionedLake.latestVersion(spark, lake)
+    // the keys frame may carry other columns: only the indexed one joins
+    val keys = Seq((3L, "k3"), (7L, "k7")).toDF("ident", "tag")
+    val (toRead, _, nSkip) = BloomIndex.prunedRels(spark, lake, v2, keys)
+    assert(nSkip == 1 && toRead.size == 1, s"read=$toRead skip=$nSkip")
+    val got = BloomIndex.lookup(spark, lake, keys, v2, toRead)
+    assert(got.columns.toSeq == Seq("ident", "part", "x"))
+    assert(got.select($"ident").as[Long].collect().toSet == Set(3L, 7L))
+    // below the rename the same overload probes under the old name
+    val old = Seq(3L).toDF("id")
+    val (toRead1, _, _) = BloomIndex.prunedRels(spark, lake, 1, old)
+    assert(BloomIndex.lookup(spark, lake, old, 1, toRead1)
+      .select($"id").as[Long].collect().toSet == Set(3L))
   }
 
   test("bloom index backfill: many-file lake with Hive-escaped " +
