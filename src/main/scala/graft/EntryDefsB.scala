@@ -706,8 +706,7 @@ private[graft] object EntryDefsB {
     val inc = Similarity
       .probeNearDupDelta(delta, s.read.parquet(idx), base, 0.4, tables)
       .select("id_a", "id_b").localCheckpoint(true)
-    val rebuild = Similarity.nearDupPairs(emb, 0.4,
-        nTables = tables.size, planesPerTable = tables.head.length)
+    val rebuild = Similarity.nearDupPairs(emb, 0.4, stats = Some((n, dim)))
       .filter(col("id_a") % 4 === 3 || col("id_b") % 4 === 3)
       .select("id_a", "id_b").localCheckpoint(true)
     val truth = Similarity.bruteForcePairs(emb, 0.4)

@@ -1410,9 +1410,10 @@ private[graft] object EntryDefsC {
     * at sf0.1 (RecallProbe), real margin on both bounds. Compressed
     * top-k RANKING on these near-random fixture embeddings is
     * near-chance (structureless data has no low-dim structure to keep),
-    * so the rank-claim is deliberately NOT the contract —
-    * [[graft.operators.Similarity.projectedTopK]] ships as the
-    * shortlist-then-exact-rerank usage. The oracle re-derives n_pairs
+    * so the rank-claim is deliberately NOT the contract: a compressed
+    * ranking only earns its keep as a shortlist an exact rerank
+    * reorders ([[graft.operators.Similarity.jlDistortionPairs]] is the
+    * measured operator). The oracle re-derives n_pairs
     * structurally (even⋈odd id join) and asserts the booleans TRUE. */
   private[graft] def s07(s: SparkSession, d: String): DataFrame = {
     val pairs = Similarity.jlDistortionPairs(Tables.embeddings(s, d))

@@ -55,8 +55,7 @@ object RecallProbe {
         Similarity.bruteForcePairs(emb, 0.4)
           .filter(col("id_a") % 4 === 3 || col("id_b") % 4 === 3),
         inc)
-      val reb = Similarity.nearDupPairs(emb, 0.4,
-          nTables = tables.size, planesPerTable = tables.head.length)
+      val reb = Similarity.nearDupPairs(emb, 0.4, stats = Some((n, dim)))
         .filter(col("id_a") % 4 === 3 || col("id_b") % 4 === 3)
         .select("id_a", "id_b")
       println(s"EQ d14 inc==rebuild: " +
@@ -79,9 +78,9 @@ object RecallProbe {
     // d09: semdedup drop recall vs the ideal drop set (vectors having a
     // LOWER-id global near-dup — the drops an exact all-pairs pass makes)
     {
-      val ideal = Similarity.bruteForcePairs(emb, sys.env.getOrElse("D09_T", "0.4").toDouble)
+      val ideal = Similarity.bruteForcePairs(emb, 0.4)
         .select(col("id_b").as("vec_id")).distinct()
-      val dropped = Similarity.semDedup(emb, sys.env.getOrElse("D09_T", "0.4").toDouble, nLists = sys.env.getOrElse("D09_NLISTS", "16").toInt)
+      val dropped = Similarity.semDedup(emb, 0.4)
         .filter(col("dropped")).select("vec_id")
       val t = ideal.count()
       val h = ideal.join(dropped, Seq("vec_id"), "left_semi").count()

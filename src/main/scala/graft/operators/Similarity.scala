@@ -22,27 +22,86 @@ import graft.plans.VectorFunctions
   *    expression, not interpreted higher-order lambdas.
   *  - The LSH path buckets corpus and queries by sign-pattern bands of
   *    random hyperplane projections; only same-bucket pairs are scored.
-  *    Bands OR-amplify recall; `nTables × planesPerTable` trade recall
-  *    for candidate volume.
+  *    Bands OR-amplify recall; [[tuneSignLsh]] sizes tables × planes
+  *    from the corpus, trading recall for candidate volume.
+  *  - The family shares one definition of each repeated step: per-key
+  *    top-k ([[topK]]), nearest-cells probe ([[nearestCells]]),
+  *    candidate→vector re-attach ([[withVectors]]), exact shortlist
+  *    rerank, PQ encode ([[pqEncode]]) and LSH sizing
+  *    ([[nearDupTables]]).
   */
 object Similarity {
+
+  /** `df`'s id and vector columns as `<side>_id` / `<side>_vec`
+    * (side = cand, query, anchor), followed by `extra`. */
+  private def keyed(df: DataFrame, side: String, idCol: String,
+                    vecCol: String, extra: Column*): DataFrame =
+    df.select(Seq(col(idCol).as(s"${side}_id"),
+      col(vecCol).as(s"${side}_vec")) ++ extra: _*)
+
+  /** A query never returns itself. */
+  private val notSelf: Column = col("cand_id") =!= col("query_id")
+
+  /** THE per-key top-k of the ANN family: `rank` = row_number over
+    * `by` ordered by `order` (a score, then the id that breaks its
+    * ties — a total order, so the cut is reproducible), kept while
+    * <= k. The rank filter plans as a map-side WindowGroupLimit. */
+  private def topK(df: DataFrame, by: String, k: Int,
+                   rank: String = "rnk")(order: Column*): DataFrame =
+    df.withColumn(rank,
+        row_number().over(Window.partitionBy(col(by)).orderBy(order: _*)))
+      .filter(col(rank) <= k)
+
+  /** Exact cosine top-k over (query_id, query_vec, cand_id, cand_vec)
+    * candidate rows: ranked by (sim desc, cand_id asc), sim at 4dp. */
+  private def cosineTopK(cands: DataFrame, k: Int): DataFrame =
+    topK(cands.withColumn("sim",
+        VectorFunctions.cosine(col("cand_vec"), col("query_vec"))),
+        "query_id", k)(col("sim").desc, col("cand_id").asc)
+      .select(col("query_id"), col("rnk"), col("cand_id"),
+        round(col("sim"), 4).as("sim"))
+
+  /** THE candidate→vector re-attach: vectors rejoin bare (query_id,
+    * cand_id) pairs by id — the corpus side on its own key
+    * (co-partitioned at scale), the query side broadcast. */
+  private def withVectors(pairs: DataFrame, corpus: DataFrame,
+                          queries: DataFrame, idCol: String,
+                          vecCol: String): DataFrame =
+    pairs.join(keyed(corpus, "cand", idCol, vecCol), Seq("cand_id"))
+      .join(broadcast(keyed(queries, "query", idCol, vecCol)),
+        Seq("query_id"))
+
+  /** Exact rerank of an ANN shortlist of (query_id, cand_id): cosine
+    * 9dp-rounded at source (the s09 discipline), top-k by (rsim desc,
+    * cand_id asc), rnk as long. */
+  private def rerankShortlist(shortlist: DataFrame, corpus: DataFrame,
+                              queries: DataFrame, k: Int, idCol: String,
+                              vecCol: String): DataFrame =
+    topK(withVectors(shortlist, corpus, queries, idCol, vecCol)
+        .withColumn("rsim", round(VectorFunctions.cosine(col("cand_vec"),
+          col("query_vec")), 9)),
+        "query_id", k)(col("rsim").desc, col("cand_id").asc)
+      .select(col("query_id"), col("rnk").cast("long").as("rnk"),
+        col("cand_id"), round(col("rsim"), 4).as("sim"))
+
+  /** THE nearest-cells probe: each `<side>` vector crossed with the
+    * broadcast centroids keeps its `n` nearest cells by (csim desc,
+    * cell asc); every input column rides along for the caller's
+    * select. */
+  private def nearestCells(vecs: DataFrame, centroids: DataFrame,
+                           side: String, n: Int, rank: String): DataFrame =
+    topK(vecs.crossJoin(broadcast(centroids))
+        .withColumn("csim", VectorFunctions.cosine(col(s"${side}_vec"),
+          col("centroid"))),
+        s"${side}_id", n, rank)(col("csim").desc, col("cell").asc)
 
   /** Brute-force exact top-k neighbors for each query vector. */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                      idCol: String = "vec_id", vecCol: String = "embedding")
-      : DataFrame = {
-    val c = corpus.select(col(idCol).as("cand_id"), col(vecCol).as("cand_vec"))
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("query_vec"))
-    val scored = c.crossJoin(broadcast(q))
-      .filter(col("cand_id") =!= col("query_id"))
-      .withColumn("sim", VectorFunctions.cosine(col("cand_vec"), col("query_vec")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("cand_id").asc)
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("rnk"), col("cand_id"),
-        round(col("sim"), 4).as("sim"))
-  }
+      : DataFrame =
+    cosineTopK(keyed(corpus, "cand", idCol, vecCol)
+      .crossJoin(broadcast(keyed(queries, "query", idCol, vecCol)))
+      .filter(notSelf), k)
 
   /** MMR (maximal marginal relevance, Carbonell & Goldstein 1998)
     * diversity re-rank: greedily pick k results balancing relevance to
@@ -66,16 +125,12 @@ object Similarity {
   def mmrRerank(corpus: DataFrame, queries: DataFrame, k: Int = 10,
                 pool: Int = 20, idCol: String = "vec_id",
                 vecCol: String = "embedding"): DataFrame = {
-    val c = corpus.select(col(idCol).as("cand_id"), col(vecCol).as("cand_vec"))
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("query_vec"))
-    val wTop = Window.partitionBy(col("query_id"))
-      .orderBy(col("rel").desc, col("cand_id").asc)
-    val top = c.crossJoin(broadcast(q))
-      .filter(col("cand_id") =!= col("query_id"))
-      .withColumn("rel",
-        round(VectorFunctions.cosine(col("cand_vec"), col("query_vec")), 9))
-      .withColumn("rnk", row_number().over(wTop))
-      .filter(col("rnk") <= pool)
+    val top = topK(keyed(corpus, "cand", idCol, vecCol)
+        .crossJoin(broadcast(keyed(queries, "query", idCol, vecCol)))
+        .filter(notSelf)
+        .withColumn("rel",
+          round(VectorFunctions.cosine(col("cand_vec"), col("query_vec")), 9)),
+        "query_id", pool)(col("rel").desc, col("cand_id").asc)
       .select(col("query_id"), col("cand_id"), col("cand_vec"), col("rel"))
       .localCheckpoint(true)
     val cand = top.select(col("query_id"), col("cand_id"), col("rel"))
@@ -87,13 +142,12 @@ object Similarity {
       .select(col("query_id"), col("ia"), col("ib"),
         round(VectorFunctions.cosine(col("va"), col("vb")), 9).as("s"))
       .localCheckpoint(true)
-    val wSel = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("cand_id").asc)
-    var acc = cand
-      .withColumn("score", col("rel"))
-      .withColumn("r", row_number().over(wSel))
-      .filter(col("r") === 1)
-      .select(col("query_id"), lit(1).as("step"), col("cand_id"), col("score"))
+    // each greedy round keeps the per-query best (score, cand_id)
+    def pick(scored: DataFrame, step: Int): DataFrame =
+      topK(scored, "query_id", 1, "r")(col("score").desc, col("cand_id").asc)
+        .select(col("query_id"), lit(step).as("step"), col("cand_id"),
+          col("score"))
+    var acc = pick(cand.withColumn("score", col("rel")), 1)
       .localCheckpoint(true)
     for (step <- 2 to k) {
       val selSet = acc.select(col("query_id"), col("cand_id"))
@@ -103,13 +157,10 @@ object Similarity {
         .groupBy(col("query_id"), col("ia"))
         .agg(max(col("s")).as("maxsim"))
         .withColumnRenamed("ia", "cand_id")
-      val next = remaining.join(simToSel, Seq("query_id", "cand_id"))
+      val next = pick(remaining.join(simToSel, Seq("query_id", "cand_id"))
         .select(col("query_id"), col("cand_id"),
-          (lit(0.5) * col("rel") - lit(0.5) * col("maxsim")).as("score"))
-        .withColumn("r", row_number().over(wSel))
-        .filter(col("r") === 1)
-        .select(col("query_id"), lit(step).as("step"), col("cand_id"),
-          col("score"))
+          (lit(0.5) * col("rel") - lit(0.5) * col("maxsim")).as("score")),
+        step)
       acc = acc.unionByName(next).localCheckpoint(true)
     }
     acc.select(col("query_id"), col("step"), col("cand_id"),
@@ -131,70 +182,29 @@ object Similarity {
     * against. */
   def mipsTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                idCol: String = "vec_id", vecCol: String = "embedding")
-      : DataFrame = {
-    val c = corpus.select(col(idCol).as("cand_id"), col(vecCol).as("cand_vec"))
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("query_vec"))
-    val scored = c.crossJoin(broadcast(q))
-      .filter(col("cand_id") =!= col("query_id"))
-      .withColumn("score",
-        VectorFunctions.dot(col("cand_vec"), col("query_vec")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("cand_id").asc)
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+      : DataFrame =
+    topK(keyed(corpus, "cand", idCol, vecCol)
+        .crossJoin(broadcast(keyed(queries, "query", idCol, vecCol)))
+        .filter(notSelf)
+        .withColumn("score",
+          VectorFunctions.dot(col("cand_vec"), col("query_vec"))),
+        "query_id", k)(col("score").desc, col("cand_id").asc)
       .select(col("query_id"), col("rnk"), col("cand_id"),
         round(col("score"), 4).as("score"))
-  }
 
-  /** Johnson–Lindenstrauss compressed top-k: project corpus AND queries
-    * through the same seeded Gaussian plane matrix
-    * ([[graft.plans.ProjectVector]], dim → nDims), then rank by cosine
-    * in the compressed space. The JL lemma says angles survive the
-    * compression approximately, so the compressed ranking approximates
-    * the exact one at nDims/dim of the scoring and shuffle cost — the
-    * embedding-compression trade every vector store offers. At 100 TB
-    * this is a storage-layer lever too: persist the 4× smaller projected
-    * column once and every downstream scan pays nDims, not dim (compose
-    * with lshTopK/ivfTopK for sub-linear candidate generation — this
-    * operator is about WIDTH, those are about DEPTH). Deterministic:
-    * planes come from a fixed seed, projection is the codegen'd
-    * expression, ties break on cand_id. */
-  def projectedTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-                    nDims: Int = 16, seed: Long = 7L,
-                    stats: Option[(Long, Int)] = None,
-                    idCol: String = "vec_id", vecCol: String = "embedding")
-      : DataFrame = {
-    val dim = stats.map(_._2).getOrElse(vecDim(corpus, vecCol))
-    val planes = hyperplanes(nDims, dim, seed)
-    def proj(c: Column): Column =
-      graft.plans.ProjectVectorFunctions.projectVector(c, planes)
-    val c = corpus.select(col(idCol).as("cand_id"),
-      proj(col(vecCol)).as("cand_vec"))
-    val q = queries.select(col(idCol).as("query_id"),
-      proj(col(vecCol)).as("query_vec"))
-    val scored = c.crossJoin(broadcast(q))
-      .filter(col("cand_id") =!= col("query_id"))
-      .withColumn("sim",
-        VectorFunctions.cosine(col("cand_vec"), col("query_vec")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("cand_id").asc)
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("rnk"), col("cand_id"),
-        round(col("sim"), 4).as("sim"))
-  }
-
-  /** Cosine distortion of the JL projection, measured on the
+  /** Cosine distortion of the Johnson–Lindenstrauss projection
+    * (corpus vectors through one seeded Gaussian plane matrix,
+    * [[graft.plans.ProjectVector]], dim → nDims), measured on the
     * deterministic disjoint pairing (2i, 2i+1): one row per pair with
     * the exact (full-dim) and projected cosine. The JL lemma's claim is
     * DISTANCE preservation, not rank preservation — on structureless
     * near-random embeddings (this fixture) compressed top-k is
     * near-chance while pairwise cosine error stays bounded by ~1/√nDims,
-    * so the distortion contract is the honest one (s07 asserts it;
-    * [[projectedTopK]] is the shortlist-and-rerank usage). Self-join on
-    * the pair id only — at 100 TB the pairing key is derived from the
-    * id, both sides partition the same way, and nothing but (id, vec)
-    * ever shuffles. */
+    * so the distortion contract is the honest one (s07 asserts it; a
+    * compressed ranking is only useful as a shortlist that an exact
+    * rerank reorders). Self-join on the pair id only — at 100 TB the
+    * pairing key is derived from the id, both sides partition the same
+    * way, and nothing but (id, vec) ever shuffles. */
   def jlDistortionPairs(corpus: DataFrame, nDims: Int = 32, seed: Long = 7L,
                         stats: Option[(Long, Int)] = None,
                         idCol: String = "vec_id", vecCol: String = "embedding")
@@ -299,45 +309,40 @@ object Similarity {
       posexplode(graft.plans.SignBucketsFunctions.signBuckets(col(vecCol), tables)))
       .withColumnRenamed("pos", "table").withColumnRenamed("col", "bucket")
 
-  /** LSH-bucketed approximate top-k: `nTables` independent sign-LSH
-    * tables; candidates = corpus rows sharing any table bucket with the
-    * query; exact cosine re-rank of candidates. Recall for neighbors at
-    * angle θ is 1-(1-(1-θ/π)^planes)^tables. */
+  /** LSH-bucketed approximate top-k: sign-LSH tables sized by
+    * [[nearDupTables]] at `simFloor`; candidates = corpus rows sharing
+    * any table bucket with the query; exact cosine re-rank of
+    * candidates. Recall for neighbors at angle θ is
+    * 1-(1-(1-θ/π)^planes)^tables. */
   def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-              nTables: Int = -1, planesPerTable: Int = -1, seed: Long = 42L,
+              seed: Long = 42L,
               simFloor: Double = 0.25, targetRecall: Double = 0.9,
               targetBucket: Int = 64,
               idCol: String = "vec_id", vecCol: String = "embedding",
               stats: Option[(Long, Int)] = None)
       : DataFrame = {
     val (n, dim) = stats.getOrElse(corpusStats(corpus, vecCol))
-    val (autoT, autoP) = tuneSignLsh(n, simFloor, targetRecall, targetBucket)
-    val nT = if (nTables > 0) nTables else autoT
-    val nP = if (planesPerTable > 0) planesPerTable else autoP
-    val tables = (0 until nT).map(t => hyperplanes(nP, dim, seed + t))
+    val tables = nearDupTables(n, dim, simFloor, seed, targetRecall,
+      targetBucket)
+    lshSearch(allBuckets(corpus, idCol, "cand_id", vecCol, tables),
+      corpus, queries, k, tables, idCol, vecCol)
+  }
 
-    // bucket ids only — the candidate distinct() must never shuffle
-    // 64-float vectors, just (query_id, cand_id) pairs
-    val candidates = allBuckets(corpus, idCol, "cand_id", vecCol, tables)
+  /** LSH search over corpus band rows (cand_id, table, bucket, in any
+    * column order): candidates are the (query, cand) pairs sharing a
+    * table bucket, deduplicated as bare ids — the distinct() never
+    * shuffles 64-float vectors — then vectors re-attached and exactly
+    * ranked. */
+  private def lshSearch(candBands: DataFrame, corpus: DataFrame,
+                        queries: DataFrame, k: Int,
+                        tables: Seq[Array[Array[Float]]], idCol: String,
+                        vecCol: String): DataFrame = {
+    val candidates = candBands
       .join(broadcast(allBuckets(queries, idCol, "query_id", vecCol, tables)),
         Seq("table", "bucket"))
-      .filter(col("cand_id") =!= col("query_id"))
+      .filter(notSelf)
       .select("query_id", "cand_id").distinct()
-
-    // re-attach vectors by id (queries stay broadcast; corpus join is an
-    // equi-join on the corpus' own key — co-partitioned at scale)
-    val withVecs = candidates
-      .join(corpus.select(col(idCol).as("cand_id"), col(vecCol).as("cand_vec")), "cand_id")
-      .join(broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("query_vec"))), "query_id")
-
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("cand_id").asc)
-    withVecs
-      .withColumn("sim", VectorFunctions.cosine(col("cand_vec"), col("query_vec")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("rnk"), col("cand_id"),
-        round(col("sim"), 4).as("sim"))
+    cosineTopK(withVectors(candidates, corpus, queries, idCol, vecCol), k)
   }
 
   /** IVF (inverted-file) approximate top-k: k-means partitions the
@@ -424,14 +429,8 @@ object Similarity {
     // cells catches any pair that shares at least one of them. Cost is
     // the same dial as before — occupancy rises to nAssign·n/nLists, so
     // grow nLists with nAssign to hold per-cell volume.
-    val rankW = Window.partitionBy(col("cand_id"))
-      .orderBy(col("csim").desc, col("cell").asc)
-    val multi = corpus
-      .select(col(idCol).as("cand_id"), col(vecCol).as("cand_vec"))
-      .crossJoin(broadcast(centroids))
-      .withColumn("csim", VectorFunctions.cosine(col("cand_vec"), col("centroid")))
-      .withColumn("r", row_number().over(rankW))
-      .filter(col("r") <= nAssign)
+    val multi = nearestCells(keyed(corpus, "cand", idCol, vecCol),
+        centroids, "cand", nAssign, "r")
       .select(col("cell"), col("cand_id"), col("cand_vec"))
     val a = multi.select(col("cell"), col("cand_id").as("id_a"),
       col("cand_vec").as("vec_a"))
@@ -453,30 +452,14 @@ object Similarity {
               trainCap: Int = 4096,
               idCol: String = "vec_id", vecCol: String = "embedding")
       : DataFrame = {
-
     val (assigned, centroids) =
       clusterAssign(corpus, nLists, seed, trainCap, idCol, vecCol)
-
     // each query ranks cells by cosine-to-centroid, keeps nProbe
-    val probeW = Window.partitionBy(col("query_id"))
-      .orderBy(col("csim").desc, col("cell").asc)
-    val probes = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("query_vec"))
-      .crossJoin(broadcast(centroids))
-      .withColumn("csim", VectorFunctions.cosine(col("query_vec"), col("centroid")))
-      .withColumn("prnk", row_number().over(probeW))
-      .filter(col("prnk") <= nProbe)
+    val probes = nearestCells(keyed(queries, "query", idCol, vecCol),
+        centroids, "query", nProbe, "prnk")
       .select("query_id", "query_vec", "cell")
-
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("cand_id").asc)
-    assigned.join(broadcast(probes), Seq("cell"))
-      .filter(col("cand_id") =!= col("query_id"))
-      .withColumn("sim", VectorFunctions.cosine(col("cand_vec"), col("query_vec")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("rnk"), col("cand_id"),
-        round(col("sim"), 4).as("sim"))
+    cosineTopK(assigned.join(broadcast(probes), Seq("cell"))
+      .filter(notSelf), k)
   }
 
   /** Exact FILTERED top-k: for each query, the k nearest corpus vectors
@@ -490,21 +473,11 @@ object Similarity {
   def bruteForceTopKFiltered(corpus: DataFrame, queries: DataFrame,
                              k: Int, idCol: String = "vec_id",
                              vecCol: String = "embedding",
-                             labelCol: String = "label"): DataFrame = {
-    val c = corpus.select(col(idCol).as("cand_id"),
-      col(vecCol).as("cand_vec"), col(labelCol).as("lbl"))
-    val q = queries.select(col(idCol).as("query_id"),
-      col(vecCol).as("query_vec"), col(labelCol).as("lbl"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("cand_id").asc)
-    c.join(broadcast(q), Seq("lbl"))
-      .filter(col("cand_id") =!= col("query_id"))
-      .withColumn("sim", VectorFunctions.cosine(col("cand_vec"), col("query_vec")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("rnk"), col("cand_id"),
-        round(col("sim"), 4).as("sim"))
-  }
+                             labelCol: String = "label"): DataFrame =
+    cosineTopK(keyed(corpus, "cand", idCol, vecCol, col(labelCol).as("lbl"))
+      .join(broadcast(keyed(queries, "query", idCol, vecCol,
+        col(labelCol).as("lbl"))), Seq("lbl"))
+      .filter(notSelf), k)
 
   /** Filtered IVF ANN — the known-hard regime of approximate vector
     * search (every production vector store's "metadata filtering"
@@ -526,32 +499,18 @@ object Similarity {
     val (assigned, centroids) =
       clusterAssign(labeled, nLists, seed, trainCap, idCol, vecCol,
         carryCols = Seq("lbl"))
-    val probeW = Window.partitionBy(col("query_id"))
-      .orderBy(col("csim").desc, col("cell").asc)
-    val probes = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("query_vec"),
-        col(labelCol).as("lbl"))
-      .crossJoin(broadcast(centroids))
-      .withColumn("csim", VectorFunctions.cosine(col("query_vec"), col("centroid")))
-      .withColumn("prnk", row_number().over(probeW))
-      .filter(col("prnk") <= nProbe)
+    val probes = nearestCells(keyed(queries, "query", idCol, vecCol,
+        col(labelCol).as("lbl")), centroids, "query", nProbe, "prnk")
       .select("query_id", "query_vec", "cell", "lbl")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("cand_id").asc)
-    assigned.join(broadcast(probes), Seq("cell", "lbl"))
-      .filter(col("cand_id") =!= col("query_id"))
-      .withColumn("sim", VectorFunctions.cosine(col("cand_vec"), col("query_vec")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("rnk"), col("cand_id"),
-        round(col("sim"), 4).as("sim"))
+    cosineTopK(assigned.join(broadcast(probes), Seq("cell", "lbl"))
+      .filter(notSelf), k)
   }
 
   /** Embedding near-duplicate pairs: all corpus pairs with cosine >=
     * threshold, found via the same sign-LSH tables (both sides bucketed,
-    * self-join per table/bucket) then exact cosine verify. */
-  def nearDupPairs(corpus: DataFrame, threshold: Double,
-                   nTables: Int = -1, planesPerTable: Int = -1, seed: Long = 42L,
+    * self-join per table/bucket) then exact cosine verify. The tables
+    * are [[nearDupTables]] for `stats` (default: one corpus pass). */
+  def nearDupPairs(corpus: DataFrame, threshold: Double, seed: Long = 42L,
                    targetRecall: Double = 0.95, targetBucket: Int = 64,
                    idCol: String = "vec_id", vecCol: String = "embedding",
                    stats: Option[(Long, Int)] = None)
@@ -559,10 +518,8 @@ object Similarity {
     val (n, dim) = stats.getOrElse(corpusStats(corpus, vecCol))
     // simFloor = the verify threshold: recall is promised exactly for
     // pairs the operator would keep
-    val (autoT, autoP) = tuneSignLsh(n, threshold, targetRecall, targetBucket)
-    val nT = if (nTables > 0) nTables else autoT
-    val nP = if (planesPerTable > 0) planesPerTable else autoP
-    val tables = (0 until nT).map(t => hyperplanes(nP, dim, seed + t))
+    val tables = nearDupTables(n, dim, threshold, seed, targetRecall,
+      targetBucket)
     val bucketed = allBuckets(corpus, idCol, "id", vecCol, tables)
 
     val l = bucketed.select(col("table"), col("bucket"), col("id").as("id_a"))
@@ -614,14 +571,11 @@ object Similarity {
       QuantizeFunctions.quantize(col(vecCol), sc).as("cand_q"))
     val q = queries.select(col(idCol).as("query_id"),
       QuantizeFunctions.quantize(col(vecCol), sc).as("query_q"))
-    val scored = c.crossJoin(broadcast(q))
-      .filter(col("cand_id") =!= col("query_id"))
-      .withColumn("iscore",
-        QuantizeFunctions.intDot(col("cand_q"), col("query_q")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("iscore").desc, col("cand_id").asc)
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+    topK(c.crossJoin(broadcast(q))
+        .filter(notSelf)
+        .withColumn("iscore",
+          QuantizeFunctions.intDot(col("cand_q"), col("query_q"))),
+        "query_id", k)(col("iscore").desc, col("cand_id").asc)
       .select(col("query_id"), col("rnk"), col("cand_id"), col("iscore"))
   }
 
@@ -659,50 +613,22 @@ object Similarity {
     val dim = vecDim(corpus, vecCol)
     require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
     val sub = dim / m
-    def slices(df: DataFrame, outId: String): DataFrame =
-      sliceFrame(df, outId, m, sub, idCol, vecCol)
     val codebook = trainPqCodebook(corpus, m, sub, codeK, trainCap,
       idCol, vecCol)
-    // encode: argmin over |sv−cen|² = cnorm2 − 2·dot + |sv|²; |sv|² is
-    // constant within the group, so the 9dp-rounded key + code break
-    // is a deterministic min
-    val codes = slices(corpus, "cand_id")
-      .join(broadcast(codebook), Seq("j"))
-      .groupBy(col("cand_id"), col("j"))
-      .agg(min(struct(
-        round(col("cnorm2") -
-          lit(2.0) * VectorFunctions.dot(col("sv"), col("cen")), 9)
-          .as("dk"),
-        col("code").as("code"))).as("best"))
-      .select(col("cand_id"), col("j"), col("best.code").as("code"))
-    val lut = slices(queries, "query_id")
+    val codes = pqEncode(corpus, idCol, vecCol, codebook, m, sub)
+    val lut = sliceFrame(queries, "query_id", m, sub, idCol, vecCol)
       .join(broadcast(codebook), Seq("j"))
       .select(col("query_id"), col("j"), col("code"),
         VectorFunctions.dot(col("sv"), col("cen")).as("dq"),
         col("cnorm2"))
-    val wA = Window.partitionBy(col("query_id"))
-      .orderBy(col("adck").desc, col("cand_id").asc)
-    val shortlist = codes.join(broadcast(lut), Seq("j", "code"))
-      .filter(col("cand_id") =!= col("query_id"))
-      .groupBy(col("query_id"), col("cand_id"))
-      .agg(sum(col("dq")).as("sdot"), sum(col("cnorm2")).as("sn2"))
-      .withColumn("adck", round(col("sdot") / sqrt(col("sn2")), 9))
-      .withColumn("arnk", row_number().over(wA))
-      .filter(col("arnk") <= rerank)
+    val shortlist = topK(codes.join(broadcast(lut), Seq("j", "code"))
+        .filter(notSelf)
+        .groupBy(col("query_id"), col("cand_id"))
+        .agg(sum(col("dq")).as("sdot"), sum(col("cnorm2")).as("sn2"))
+        .withColumn("adck", round(col("sdot") / sqrt(col("sn2")), 9)),
+        "query_id", rerank, "arnk")(col("adck").desc, col("cand_id").asc)
       .select(col("query_id"), col("cand_id"))
-    val wR = Window.partitionBy(col("query_id"))
-      .orderBy(col("rsim").desc, col("cand_id").asc)
-    shortlist
-      .join(corpus.select(col(idCol).as("cand_id"),
-        col(vecCol).as("cand_vec")), Seq("cand_id"))
-      .join(broadcast(queries.select(col(idCol).as("query_id"),
-        col(vecCol).as("query_vec"))), Seq("query_id"))
-      .withColumn("rsim",
-        round(VectorFunctions.cosine(col("cand_vec"), col("query_vec")), 9))
-      .withColumn("rnk", row_number().over(wR))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("rnk").cast("long").as("rnk"),
-        col("cand_id"), round(col("rsim"), 4).as("sim"))
+    rerankShortlist(shortlist, corpus, queries, k, idCol, vecCol)
   }
 
   /** Explode `df`'s `vecCol` into its m contiguous `sub`-dim
@@ -830,31 +756,34 @@ object Similarity {
     val codebook =
       trainPqCodebook(resid, m, sub, codeK, trainCap, "cand_id", "rvec")
     IvfAdcIndex(centroids, codebook,
-      encodeResiduals(resid, codebook, m, sub))
+      pqEncode(resid, "cand_id", "rvec", codebook, m, sub, Seq("cell")))
   }
 
-  /** Residual encode: argmin_code |rvⱼ−cen|² (the pqTopK discipline —
-    * |rvⱼ|² is constant within the group, 9dp-rounded key + code
-    * tie-break make the min deterministic); `cell` rides along so the
+  /** THE PQ encode of both PQ paths: argmin_code |svⱼ−cen|² =
+    * cnorm2 − 2·dot + |svⱼ|² per (id, j), as a partial-combining
+    * min-struct aggregation against the broadcast codebook; |svⱼ|² is
+    * constant within the group, so the 9dp-rounded key + code
+    * tie-break make the min deterministic. `carry` columns ride the
+    * group key — the IVFADC residual encode carries `cell` so its
     * scoring join needs no second corpus-sized join. Per-row
     * independent, so batch-at-once and micro-batch-at-a-time encodes
     * are computed-equal by construction — the property st21's
     * streaming codes maintenance is gated on.
-    * @param resid (cand_id, cell, rvec) residual vectors
-    * @return (cand_id, cell, j, code) */
-  private def encodeResiduals(resid: DataFrame, codebook: DataFrame,
-                              m: Int, sub: Int): DataFrame =
-    sliceFrame(resid, "cand_id", m, sub, "cand_id", "rvec",
-        carryCols = Seq("cell"))
+    * @return (cand_id, carry…, j, code) */
+  private def pqEncode(vecs: DataFrame, idCol: String, vecCol: String,
+                       codebook: DataFrame, m: Int, sub: Int,
+                       carry: Seq[String] = Nil): DataFrame = {
+    val keys = ("cand_id" +: carry :+ "j").map(col)
+    sliceFrame(vecs, "cand_id", m, sub, idCol, vecCol, carry)
       .join(broadcast(codebook), Seq("j"))
-      .groupBy(col("cand_id"), col("cell"), col("j"))
+      .groupBy(keys: _*)
       .agg(min(struct(
         round(col("cnorm2") -
           lit(2.0) * VectorFunctions.dot(col("sv"), col("cen")), 9)
           .as("dk"),
         col("code").as("code"))).as("best"))
-      .select(col("cand_id"), col("cell"), col("j"),
-        col("best.code").as("code"))
+      .select(keys :+ col("best.code").as("code"): _*)
+  }
 
   /** Encode NEW vectors against a FROZEN index — the ingest half of a
     * production vector store's lifecycle: the coarse centroids and PQ
@@ -896,7 +825,8 @@ object Similarity {
       .select(col(idCol).as("cand_id"), col("b.cell").as("cell"),
         zip_with(col("b.vec"), col("b.centroid"),
           (a, b) => a - b).as("rvec"))
-    encodeResiduals(resid, index.codebook, mIdx, sub)
+    pqEncode(resid, "cand_id", "rvec", index.codebook, mIdx, sub,
+      Seq("cell"))
   }
 
   /** Search a (possibly lake-loaded) IVFADC index: per-(query, cell)
@@ -924,26 +854,16 @@ object Similarity {
     require(dim % mIdx == 0,
       s"dim $dim not divisible into $mIdx subspaces")
     val sub = dim / mIdx
-    val centroids = index.centroids
-    val codebook = index.codebook
-    val codes = index.codes
     val uCorpus = unitNorm(corpus, idCol, vecCol)
     val uQueries = unitNorm(queries, idCol, vecCol)
-    val probeW = Window.partitionBy(col("query_id"))
-      .orderBy(col("csim").desc, col("cell").asc)
-    val qres = uQueries
-      .select(col(idCol).as("query_id"), col(vecCol).as("query_vec"))
-      .crossJoin(broadcast(centroids))
-      .withColumn("csim",
-        VectorFunctions.cosine(col("query_vec"), col("centroid")))
-      .withColumn("prnk", row_number().over(probeW))
-      .filter(col("prnk") <= nProbe)
+    val qres = nearestCells(keyed(uQueries, "query", idCol, vecCol),
+        index.centroids, "query", nProbe, "prnk")
       .select(col("query_id"), col("cell"),
         zip_with(col("query_vec"), col("centroid"),
           (a, b) => a - b).as("qrv"))
     val lut = sliceFrame(qres, "query_id", mIdx, sub, "query_id", "qrv",
         carryCols = Seq("cell"))
-      .join(broadcast(codebook), Seq("j"))
+      .join(broadcast(index.codebook), Seq("j"))
       .select(col("query_id"), col("cell"), col("j"), col("code"),
         VectorFunctions.dot(col("sv"), col("cen")).as("dq"),
         col("cnorm2"),
@@ -951,31 +871,17 @@ object Similarity {
     // a candidate's m code rows match exactly its own cell's LUT rows,
     // so the equi-join IS the probe filter; each (query, cand) group
     // sums m lookups
-    val wA = Window.partitionBy(col("query_id"))
-      .orderBy(col("adist").asc, col("cand_id").asc)
-    val shortlist = codes.join(broadcast(lut), Seq("cell", "j", "code"))
-      .filter(col("cand_id") =!= col("query_id"))
-      .groupBy(col("query_id"), col("cand_id"))
-      .agg(sum(col("qc2")).as("sq2"), sum(col("dq")).as("sdot"),
-        sum(col("cnorm2")).as("sn2"))
-      .withColumn("adist",
-        round(col("sq2") - lit(2.0) * col("sdot") + col("sn2"), 9))
-      .withColumn("arnk", row_number().over(wA))
-      .filter(col("arnk") <= rerank)
+    val shortlist = topK(index.codes
+        .join(broadcast(lut), Seq("cell", "j", "code"))
+        .filter(notSelf)
+        .groupBy(col("query_id"), col("cand_id"))
+        .agg(sum(col("qc2")).as("sq2"), sum(col("dq")).as("sdot"),
+          sum(col("cnorm2")).as("sn2"))
+        .withColumn("adist",
+          round(col("sq2") - lit(2.0) * col("sdot") + col("sn2"), 9)),
+        "query_id", rerank, "arnk")(col("adist").asc, col("cand_id").asc)
       .select(col("query_id"), col("cand_id"))
-    val wR = Window.partitionBy(col("query_id"))
-      .orderBy(col("rsim").desc, col("cand_id").asc)
-    shortlist
-      .join(uCorpus.select(col(idCol).as("cand_id"),
-        col(vecCol).as("cand_vec")), Seq("cand_id"))
-      .join(broadcast(uQueries.select(col(idCol).as("query_id"),
-        col(vecCol).as("query_vec"))), Seq("query_id"))
-      .withColumn("rsim",
-        round(VectorFunctions.cosine(col("cand_vec"), col("query_vec")), 9))
-      .withColumn("rnk", row_number().over(wR))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("rnk").cast("long").as("rnk"),
-        col("cand_id"), round(col("rsim"), 4).as("sim"))
+    rerankShortlist(shortlist, uCorpus, uQueries, k, idCol, vecCol)
   }
 
   /** IVFADC — the composed production ANN index (Jégou, Douze &
@@ -1030,23 +936,17 @@ object Similarity {
     * (s09 discipline) so the cutoff is engine-agnostic. */
   def hardNegatives(corpus: DataFrame, anchors: DataFrame, k: Int,
                     idCol: String = "vec_id", vecCol: String = "embedding",
-                    labelCol: String = "label"): DataFrame = {
-    val c = corpus.select(col(idCol).as("cand_id"),
-      col(vecCol).as("cand_vec"), col(labelCol).as("cand_label"))
-    val a = anchors.select(col(idCol).as("anchor_id"),
-      col(vecCol).as("anchor_vec"), col(labelCol).as("anchor_label"))
-    val w = Window.partitionBy(col("anchor_id"))
-      .orderBy(col("simk").desc, col("cand_id").asc)
-    c.crossJoin(broadcast(a))
-      .filter(col("cand_id") =!= col("anchor_id") &&
-        col("cand_label") =!= col("anchor_label"))
-      .withColumn("simk",
-        round(VectorFunctions.cosine(col("cand_vec"), col("anchor_vec")), 9))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+                    labelCol: String = "label"): DataFrame =
+    topK(keyed(corpus, "cand", idCol, vecCol, col(labelCol).as("cand_label"))
+        .crossJoin(broadcast(keyed(anchors, "anchor", idCol, vecCol,
+          col(labelCol).as("anchor_label"))))
+        .filter(col("cand_id") =!= col("anchor_id") &&
+          col("cand_label") =!= col("anchor_label"))
+        .withColumn("simk", round(VectorFunctions.cosine(col("cand_vec"),
+          col("anchor_vec")), 9)),
+        "anchor_id", k)(col("simk").desc, col("cand_id").asc)
       .select(col("anchor_id"), col("rnk").cast("long").as("rnk"),
         col("cand_id"), col("cand_label"), round(col("simk"), 4).as("sim"))
-  }
 
   /** Exact all-pairs cosine >= threshold — the O(N²) ground truth the
     * LSH recall checks compare against. Deliberately quadratic: this is
@@ -1065,9 +965,11 @@ object Similarity {
 
   // ---- persisted-LSH incremental embedding dedup (d14 / st18) ----
 
-  /** The seeded sign-LSH table set [[nearDupPairs]] would auto-tune for
-    * a corpus of `n` rows at `threshold` — exposed so an INCREMENTAL
-    * index can persist exactly the geometry a full rebuild uses.
+  /** THE sign-LSH sizing: the seeded table set [[tuneSignLsh]] sizes
+    * for a corpus of `n` rows at similarity floor `threshold` — the
+    * only source of LSH tables, for [[nearDupPairs]], [[lshTopK]] and
+    * every persisted index, so an INCREMENTAL index holds exactly the
+    * geometry a full rebuild uses.
     * Equivalence by construction: band rows computed against these
     * tables last month collide with band rows computed this month
     * exactly as one all-at-once bucketing would (hyperplanes are pure
@@ -1104,27 +1006,10 @@ object Similarity {
                        queries: DataFrame, k: Int,
                        tables: Seq[Array[Array[Float]]],
                        idCol: String = "vec_id",
-                       vecCol: String = "embedding"): DataFrame = {
-    val qBands = allBuckets(queries, idCol, "query_id", vecCol, tables)
-    val candidates = bands
-      .select(col("table"), col("bucket"), col("id").as("cand_id"))
-      .join(broadcast(qBands), Seq("table", "bucket"))
-      .filter(col("cand_id") =!= col("query_id"))
-      .select("query_id", "cand_id").distinct()
-    val withVecs = candidates
-      .join(corpusVecs.select(col(idCol).as("cand_id"),
-        col(vecCol).as("cand_vec")), "cand_id")
-      .join(broadcast(queries.select(col(idCol).as("query_id"),
-        col(vecCol).as("query_vec"))), "query_id")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("cand_id").asc)
-    withVecs
-      .withColumn("sim", VectorFunctions.cosine(col("cand_vec"), col("query_vec")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("rnk"), col("cand_id"),
-        round(col("sim"), 4).as("sim"))
-  }
+                       vecCol: String = "embedding"): DataFrame =
+    lshSearch(bands.select(col("table"), col("bucket"),
+        col("id").as("cand_id")),
+      corpusVecs, queries, k, tables, idCol, vecCol)
 
   /** Probe a DELTA batch against a PERSISTED band table: candidates =
     * delta band rows colliding with stored-or-intra-delta band rows in

@@ -283,19 +283,65 @@ object GraftLakeSource {
   val lastScanParts: AtomicReference[Option[(Int, Int)]] =
     new AtomicReference(None)
 
+  /** Boolean connectives over one translation target (a Column, or a
+    * partition-value predicate). */
+  private final case class Connectives[T](and: (T, T) => T,
+                                          or: (T, T) => T, neg: T => T)
+
+  private val columnOps = Connectives[Column](_ && _, _ || _, not)
+  private val partOps = Connectives[String => Boolean](
+    (a, b) => p => a(p) && b(p), (a, b) => p => a(p) || b(p),
+    a => p => !a(p))
+
+  /** THE weakening rule of every pushed-filter translation: a
+    * translation must be IMPLIED BY the original filter (admit a
+    * superset of its rows/partitions), so
+    *  - AND may weaken — drop an untranslatable conjunct, one
+    *    translated side still constrains soundly;
+    *  - OR needs both branches (each possibly weakened: a weakened
+    *    branch still makes the OR a superset) — a dropped branch would
+    *    lose its rows (`month='a' OR month='b'` reads two partitions,
+    *    r13 verdict #3; a branch that can't translate admits
+    *    everything, so the whole OR does);
+    *  - NOT negates only an EXACT subtree — `not(weakened)` would
+    *    REJECT rows the original accepts (turn "admits extra" into
+    *    "prunes extra": silent row loss).
+    * `exact` forbids weakening anywhere in the subtree: the only form
+    * safe to negate, and the only form safe to DELETE by. `leaf`
+    * translates a leaf exactly or not at all. */
+  private def translate[T](f: Filter, exact: Boolean, ops: Connectives[T],
+                           leaf: Filter => Option[T]): Option[T] = {
+    def go(f: Filter, exact: Boolean): Option[T] = f match {
+      case And(l, r) =>
+        (go(l, exact), go(r, exact)) match {
+          case (Some(a), Some(b)) => Some(ops.and(a, b))
+          case (one, other) if !exact => one.orElse(other)
+          case _ => None
+        }
+      case Or(l, r) => for { a <- go(l, exact); b <- go(r, exact) }
+        yield ops.or(a, b)
+      case Not(c) => go(c, exact = true).map(ops.neg)
+      case other => leaf(other)
+    }
+    go(f, exact)
+  }
+
   /** The residual-safe subset of source filters translated to Column
     * predicates for the INNER scan (parquet row-group skipping);
     * untranslatable filters are simply skipped — Spark re-applies
     * every filter above the relation, so this is purely a pushdown
-    * optimization, never a correctness dependency. The invariant that
-    * keeps it one: every translation must be IMPLIED BY the original
-    * filter (pass a superset of its rows). Weakening — dropping an
-    * untranslatable conjunct — preserves that under AND and OR
-    * (covariant positions), but NOT flips polarity: `not(weakened)`
-    * would REJECT rows the original accepts, losing them before the
-    * residual re-check can save them. So NOT translates only when its
-    * whole subtree translates EXACTLY ([[toColumnExact]]). */
-  private[sources] def toColumn(f: Filter): Option[Column] = f match {
+    * optimization, never a correctness dependency ([[translate]]'s
+    * rule keeps it one). */
+  private[sources] def toColumn(f: Filter): Option[Column] =
+    translate(f, exact = false, columnOps, columnLeaf)
+
+  /** Translation with NO weakening anywhere in the subtree — the only
+    * form safe to DELETE by ([[GraftLakeTable.deleteWhere]]: a
+    * weakened superset would delete rows the WHERE never named). */
+  private[sources] def toColumnExact(f: Filter): Option[Column] =
+    translate(f, exact = true, columnOps, columnLeaf)
+
+  private def columnLeaf(f: Filter): Option[Column] = f match {
     case EqualTo(a, v) => Some(col(a) === lit(v))
     case EqualNullSafe(a, v) => Some(col(a) <=> lit(v))
     case GreaterThan(a, v) => Some(col(a) > lit(v))
@@ -310,75 +356,18 @@ object GraftLakeSource {
     case StringStartsWith(a, v) => Some(col(a).startsWith(v))
     case StringEndsWith(a, v) => Some(col(a).endsWith(v))
     case StringContains(a, v) => Some(col(a).contains(v))
-    case And(l, r) =>
-      (toColumn(l), toColumn(r)) match {
-        case (Some(a), Some(b)) => Some(a && b)
-        case (one, other) => one.orElse(other) // AND may weaken
-      }
-    case Or(l, r) =>
-      // both branches must translate (possibly weakened: a weakened
-      // branch still makes the OR a superset), never just one — a
-      // dropped OR branch would lose its rows
-      for { a <- toColumn(l); b <- toColumn(r) } yield a || b
-    case Not(c) => toColumnExact(c).map(not) // see scaladoc: no weakening
     case _ => None
-  }
-
-  /** Translation with NO weakening anywhere in the subtree — the only
-    * form safe to negate, and the only form safe to DELETE by
-    * ([[GraftLakeTable.deleteWhere]]: a weakened superset would delete
-    * rows the WHERE never named). */
-  private[sources] def toColumnExact(f: Filter): Option[Column] = f match {
-    case And(l, r) =>
-      for { a <- toColumnExact(l); b <- toColumnExact(r) } yield a && b
-    case Or(l, r) =>
-      for { a <- toColumnExact(l); b <- toColumnExact(r) } yield a || b
-    case Not(c) => toColumnExact(c).map(not)
-    case leaf => toColumn(leaf) // leaves translate exactly or not at all
   }
 
   /** Partition-value predicate from a pushed filter on the partition
     * column (manifest partition values order lexicographically for
     * the string columns pruning engages on). The returned predicate
-    * answers "may this partition hold matching rows" — it must admit
-    * a SUPERSET of the truth, so:
-    *  - AND may weaken (one constrained side still prunes soundly);
-    *  - OR requires BOTH branches to constrain the partition column —
-    *    the pruned set is then the union (`month='a' OR month='b'`
-    *    reads two partitions, r13 verdict #3); a branch that can't
-    *    constrain it admits everything, so the whole OR reads all;
-    *  - NOT may never negate a weakened predicate (it would turn
-    *    "admits extra partitions" into "prunes extra partitions" —
-    *    silent row loss), so it negates only an EXACT subtree
-    *    ([[partPredicateExact]] — every leaf on the partition column),
-    *    mirroring [[toColumnExact]]'s invariant. */
+    * answers "may this partition hold matching rows" — a SUPERSET of
+    * the truth under [[translate]]'s rule; leaves on other columns
+    * don't translate. */
   private[sources] def partPredicate(f: Filter, pc: String)
-      : Option[String => Boolean] = f match {
-    case And(l, r) =>
-      (partPredicate(l, pc), partPredicate(r, pc)) match {
-        case (Some(a), Some(b)) => Some(p => a(p) && b(p))
-        case (one, other) => one.orElse(other)
-      }
-    case Or(l, r) =>
-      for { a <- partPredicate(l, pc); b <- partPredicate(r, pc) }
-        yield (p: String) => a(p) || b(p)
-    case Not(c) => partPredicateExact(c, pc).map(a => (p: String) => !a(p))
-    case leaf => partLeaf(leaf, pc)
-  }
-
-  /** Partition predicate with NO weakening anywhere in the subtree —
-    * the only form safe to negate. */
-  private def partPredicateExact(f: Filter, pc: String)
-      : Option[String => Boolean] = f match {
-    case And(l, r) =>
-      for { a <- partPredicateExact(l, pc); b <- partPredicateExact(r, pc) }
-        yield (p: String) => a(p) && b(p)
-    case Or(l, r) =>
-      for { a <- partPredicateExact(l, pc); b <- partPredicateExact(r, pc) }
-        yield (p: String) => a(p) || b(p)
-    case Not(c) => partPredicateExact(c, pc).map(a => (p: String) => !a(p))
-    case leaf => partLeaf(leaf, pc)
-  }
+      : Option[String => Boolean] =
+    translate(f, exact = false, partOps, partLeaf(_, pc))
 
   private def partLeaf(f: Filter, pc: String)
       : Option[String => Boolean] = f match {

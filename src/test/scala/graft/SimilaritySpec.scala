@@ -48,6 +48,27 @@ class SimilaritySpec extends SparkSpec {
     assert(viaFiltered == viaSlice)
   }
 
+  test("exact score ties rank the lower cand_id first") {
+    // twins 3 and 5 carry one vector, so every scorer ties them
+    // exactly; the higher id comes first in the input so input order
+    // can't decide the cut
+    val rows = Seq(
+      (0L, Array(1.0f, 0.0f, 0.0f), 0),    // the query / anchor
+      (5L, Array(0.8f, 0.6f, 0.0f), 1),
+      (3L, Array(0.8f, 0.6f, 0.0f), 1),
+      (7L, Array(0.0f, 1.0f, 0.0f), 1))
+      .toDF("vec_id", "embedding", "label").repartition(3)
+    val q = rows.filter($"vec_id" === 0L)
+    def top2(out: org.apache.spark.sql.DataFrame, by: String = "query_id") =
+      out.filter(col(by) === 0L).orderBy($"rnk").select($"cand_id")
+        .as[Long].collect().take(2).toSeq
+    assert(top2(Similarity.bruteForceTopK(rows, q, k = 3)) == Seq(3L, 5L))
+    assert(top2(Similarity.mipsTopK(rows, q, k = 3)) == Seq(3L, 5L))
+    assert(top2(Similarity.quantizedTopK(rows, q, k = 3)) == Seq(3L, 5L))
+    assert(top2(Similarity.hardNegatives(rows, q, k = 3), "anchor_id")
+      == Seq(3L, 5L))
+  }
+
   test("MMR demotes a redundant near-duplicate below a diverse result") {
     // query q points at A; B is nearly identical to A (redundant);
     // C is less relevant but diverse. Pure relevance ranks A, B, C;

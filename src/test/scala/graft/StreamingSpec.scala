@@ -711,8 +711,7 @@ class StreamingSpec extends SparkSpec {
       // accumulated pairs equal one all-at-once rebuild (the d14
       // equivalence, streaming form)
       val rebuild = Similarity.nearDupPairs(
-          (b0 ++ b1).toDS().toDF(), threshold = 0.9,
-          nTables = tables.size, planesPerTable = tables.head.length)
+          (b0 ++ b1).toDS().toDF(), threshold = 0.9, stats = Some((8L, 4)))
         .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
       assert(pairs == rebuild)
     } finally q.stop()
